@@ -14,23 +14,51 @@ probability sample S_A); three scenarios then produce the estimate:
 
 Model types: ``"normal"`` (OLS) or ``"logistic"`` (IRLS GLM), with the
 reference's dynamic formula re-resolution against join suffixes
-(``construir_formula_dinamica``, ``PC.R:1-39``) via ``Formula.resolve``.
+(``construir_formula_dinamica``, ``PC.R:1-39``) via ``Formula.resolve``; a
+predictor carried by both samples reads ``coalesce(p_A, p_B)``.
+
+Execution profile per call (direct mode), nothing persisted:
+  ONE moment pass over the combined table: sample sizes, the aux
+  population totals (direct sums, or the masked HT sums from S_A), and the
+  B-masked calibration Gram.  Scenario 1 then runs one svymean aggregate
+  over S_B (4 Spark jobs; S_B is the big sample and is never collected).
+  Scenarios 2 and 3 with a normal model need no second pass: yhat = o'beta
+  is linear in the design o = [1, predictors], so the OLS Gram on A (or
+  A∩B), the B cross moments Σ_B d_B [1,z]⊗[y,o] and Σ_U o ride the same
+  pass (2 jobs).  A logistic model keeps the Spark IRLS fit and one
+  aggregate over its predictions.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_est_spark.design import SurveyDesign
-from data_integration_est_spark.formula import Formula
 from data_integration_est_spark.integrate import IntegrationError
-from data_integration_est_spark.kernels.linalg import CalibrationError, fit_logistic, fit_ols
-from data_integration_est_spark.kernels.stats import svymean
-from data_integration_est_spark.estimators.regdi import _prepare
+from data_integration_est_spark.kernels.linalg import CalibrationError, _solve_stacked, fit_logistic
+from data_integration_est_spark.estimators.moments import (
+    ONE,
+    Block,
+    Lin,
+    Moments,
+    as_double,
+    model_quality,
+    ols_from,
+    spark_moments,
+    svymean_blocks,
+    svymean_from,
+)
+from data_integration_est_spark.estimators.regdi import (
+    _check_n_total,
+    _check_sizes,
+    _n_total,
+    _outcome_model,
+    _prepare,
+)
 
 
 @dataclass
@@ -40,11 +68,17 @@ class PCResult:
     model_coef: np.ndarray | None = None
     rmse: float | None = None
     r2: float | None = None
-    df: DataFrame | None = None  # combined table with d_i_A / d_i_B columns
     weight_col: str | None = None  # calibrated B weights
     # IRLS convergence of the outcome model (scenarios 2/3); None when no
     # model is fit (scenario 1) — mirrors R glm's $converged.
     model_converged: bool | None = None
+    rows: Callable[[], DataFrame] | None = field(default=None, repr=False, compare=False)
+
+    @property
+    def df(self) -> DataFrame | None:
+        """S_B rows with ``d_i_A`` / ``d_i_B`` / ``w_cal_B`` columns: a lazy
+        plan, built on access."""
+        return None if self.rows is None else self.rows()
 
 
 def pc_estimator(
@@ -66,238 +100,163 @@ def pc_estimator(
     scenario: int = 1,
     eval_model_performance: bool = False,
 ) -> PCResult:
-    df, ind_A, ind_B, y_A, y_B, aux_A, aux_B, data_direct = _prepare(
+    if scenario not in (1, 2, 3):
+        raise ValueError(f"invalid scenario {scenario!r}: must be 1, 2 or 3")
+    if model_type not in ("normal", "logistic"):
+        raise ValueError("model_type must be 'normal' or 'logistic'")
+    if scenario in (2, 3) and outcome_model is None:
+        raise ValueError("must provide 'outcome_model' for the prediction model")
+    if scenario in (1, 3) and y_B_col is None:
+        raise ValueError(f"for scenario {scenario}, 'y_B_col' cannot be None")
+    comb = _prepare(
         data, data_A, data_B, id_var_A, id_var_B, ind_var_A, ind_var_B,
         # scenario 2 allows y_B_col=None conceptually, but the join/indicator
         # derivation needs B's observation marker; the reference requires the
         # same (ind derivation reads y_B_col, ``PC.R:95-109``).
         y_A_col or "", y_B_col or y_A_col or "", aux_vars,
     )
-    indA = F.col(ind_A) == 1
-    indB = F.col(ind_B) == 1
+    cols = comb.base_columns(weights_A, weights_B)
+    _check_n_total(N_total, comb, weights_A)
 
-    # ONE fused pass: sizes, weight sums, aux population totals (direct
-    # sums or the masked HT ingredients), AND the B-side calibration Gram
-    # (an indB-masked weighted sum, scaled on the driver when d_i_B is the
-    # constant N/n_B).  Scenario 1 then completes in TWO data passes total
-    # (this one + the single-pass svymean).
-    aux_list = list(aux_vars or [])
-    cal_cols = aux_list if data_direct else aux_B
-    kb = len(cal_cols)
-    aggs = [
-        F.count(F.lit(1)).alias("nrows"),
-        F.sum(F.when(indA, 1).otherwise(0)).alias("size_A"),
-        F.sum(F.when(indB, 1).otherwise(0)).alias("size_B"),
-    ]
-    if weights_A is not None:
-        if weights_A not in df.columns:
-            raise IntegrationError(f"'weights_A' column {weights_A!r} not found in the data")
-        aggs.append(
-            F.sum(F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)).alias("sum_wA")
-        )
-    if weights_B is not None and weights_B not in df.columns:
-        raise IntegrationError(f"'weights_B' column {weights_B!r} not found in the data")
-    if data_direct:
-        # population aux totals: direct sums over the full table (``PC.R:182-187``)
-        aggs += [F.sum(F.col(z).cast("double")).alias(f"pt_{z}") for z in aux_list]
+    # calibration columns z of S_B, and the population totals they are
+    # calibrated to (``PC.R:180-199``): direct sums over the full table, or
+    # HT sums over sample A — the reference calibrates on aux_vars_B with
+    # totals estimated on aux_vars_A; we reproduce exactly that pairing.
+    zn = tuple(f"z{j}" for j in range(len(comb.aux_B)))
+    cols.update(zip(zn, map(as_double, comb.aux_B)))
+    z = tuple(map(Lin.of, zn))
+    gwA = (Lin.of("wA"),) if weights_A is not None else ()
+    gwB = (Lin.of("wB"),) if weights_B is not None else ()
+    wAneed = ("wA",) if weights_A is not None else ()
+    wBneed = ("wB",) if weights_B is not None else ()
+    if comb.direct:
+        blocks = {"tot": Block(left=(ONE,), right=z), "A": Block(left=(ONE,), weight=gwA, mask=("iA",))}
     else:
-        # HT ingredients from sample A: masked sums of the A-side aux
-        # (``PC.R:188-193``); scaled by N/n_A afterwards when weights_A
-        # is absent
-        wA_mask = (
-            F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-            if weights_A is not None
-            else F.when(indA, 1.0).otherwise(0.0)
-        )
-        aggs += [
-            F.sum(wA_mask * F.col(z).cast("double")).alias(f"ht_{i}")
-            for i, z in enumerate(aux_A)
-        ]
-    wB_mask = (
-        F.when(indB, F.col(weights_B).cast("double")).otherwise(0.0)
-        if weights_B is not None
-        else F.when(indB, 1.0).otherwise(0.0)
-    )
-    zb = [F.col(c).cast("double") for c in cal_cols]
-    aggs += [
-        F.sum(wB_mask * zb[i] * zb[j]).alias(f"gb_{i}_{j}")
-        for i in range(kb) for j in range(i, kb)
-    ]
-    aggs += [F.sum(wB_mask * zb[i]).alias(f"hb_{i}") for i in range(kb)]
-    df = df.persist()
-    tot = df.agg(*aggs).collect()[0]
+        zA = tuple(f"zA{j}" for j in range(len(comb.aux_A)))
+        cols.update(zip(zA, map(as_double, comb.aux_A)))
+        blocks = {"tot": Block(),
+                  "A": Block(left=(ONE,), right=(ONE, *map(Lin.of, zA)), weight=gwA, mask=("iA",))}
+    # the B calibration Gram (``PC.R:216-237``), scaled on the driver when
+    # d_i_B is the constant N/n_B
+    blocks["calB"] = Block(left=(ONE, *z), weight=gwB, mask=("iB",))
 
-    size_A, size_B = int(tot["size_A"] or 0), int(tot["size_B"] or 0)
-    if size_A == 0:
-        raise IntegrationError("no units in sample A")
-    if size_B == 0:
-        raise IntegrationError("no units in sample B")
-
-    if N_total is None:
-        if data_direct:
-            N_total = float(tot["nrows"])
-        elif weights_A is not None:
-            N_total = float(tot["sum_wA"])
-        else:
-            raise IntegrationError(
-                "to approximate N_total, provide sample-A weights ('weights_A')"
-            )
-
-    # design weights (``PC.R:149-171``)
-    if weights_A is not None:
-        dA = F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-    else:
-        dA = F.when(indA, F.lit(float(N_total) / size_A)).otherwise(0.0)
-    if weights_B is not None:
-        dB = F.when(indB, F.col(weights_B).cast("double")).otherwise(0.0)
-    else:
-        dB = F.when(indB, F.lit(float(N_total) / size_B)).otherwise(0.0)
-    df = df.withColumn("d_i_A", dA).withColumn("d_i_B", dB)
-
-    # population aux totals (``PC.R:180-199``): direct sums, or HT from
-    # sample A — note the reference calibrates on aux_vars_B with totals
-    # estimated on aux_vars_A; we reproduce exactly that pairing.
-    a_scale = 1.0 if weights_A is not None else float(N_total) / size_A
-    if aux_list:
-        if data_direct:
-            T_b = np.array([float(tot[f"pt_{z}"] or 0.0) for z in aux_list])
-        else:
-            T_b = np.array([
-                a_scale * float(tot[f"ht_{i}"] or 0.0) for i in range(len(aux_A))
-            ])
-    else:
-        T_b = None
-
-    # calibrate S_B weights (``PC.R:216-237``): driver solve over the
-    # fused-pass Gram, weights as a broadcast column expression
-    sample_B = df.filter(indB)
-    if aux_list:
-        from data_integration_est_spark.kernels.gram import dot_expr
-        from data_integration_est_spark.kernels.linalg import _solve_stacked
-
-        b_scale = 1.0 if weights_B is not None else float(N_total) / size_B
-        Gb = np.zeros((kb, kb))
-        for i in range(kb):
-            for j in range(i, kb):
-                Gb[i, j] = Gb[j, i] = b_scale * float(tot[f"gb_{i}_{j}"] or 0.0)
-        hb = np.array([b_scale * float(tot[f"hb_{i}"] or 0.0) for i in range(kb)])
-        lam = _solve_stacked(Gb[None, ...], (T_b - hb)[None, :, None], "calibrate").ravel()
-        wB_cal_expr = F.col("d_i_B") * (F.lit(1.0) + dot_expr(cal_cols, lam))
-        b_df = sample_B.withColumn("w_cal_B", wB_cal_expr)
-        b_design = SurveyDesign(
-            df=b_df, weight_col="w_cal_B", calibration_cols=cal_cols, base_weight_col="d_i_B"
-        )
-    else:
-        wB_cal_expr = F.col("d_i_B")
-        b_df = sample_B.withColumn("w_cal_B", wB_cal_expr)
-        b_design = SurveyDesign(df=b_df, weight_col="w_cal_B")
-
-    try:
-        if scenario == 1:
-            if y_B_col is None:
-                raise ValueError("for scenario 1, 'y_B_col' cannot be None")
-            est = svymean(b_design, y_B)[0]
-            return PCResult(estimate=est.estimate, se=est.se, df=b_df, weight_col="w_cal_B")
+    normal = scenario in (2, 3) and model_type == "normal"
+    if scenario in (2, 3):
+        o, pnames, resp = _outcome_model(outcome_model, comb, cols)
+        cols["iAB"] = f"({cols['iA']}) AND ({cols['iB']})"
+    if normal:
+        yB = Lin.of("yB")
+        blocks["ols"] = Block(left=(*o, Lin.of(resp)), need=(resp,) + pnames,
+                              mask=("iAB",) if scenario == 2 else ("iA",))
         if scenario == 2:
-            return _scenario_2(
-                df, b_df, wB_cal_expr, indA, indB, y_A, outcome_model, model_type, N_total
-            )
-        if scenario == 3:
-            return _scenario_3(
-                df, b_df, wB_cal_expr, indA, indB, y_A, y_B, outcome_model, model_type,
-                N_total, eval_model_performance,
-            )
-        raise ValueError(f"invalid scenario {scenario!r}: must be 1, 2 or 3")
-    finally:
-        df.unpersist()
+            # term1 = sum_B w_cal_B*yhat ; term2 = sum_A d_A*(y_A - yhat)
+            blocks["t1"] = Block(left=(ONE, *z), right=o, weight=gwB,
+                                 need=wBneed + zn + pnames, mask=("iB",))
+            blocks["t2"] = Block(left=(ONE,), right=(Lin.of("yA"), *o), weight=gwA,
+                                 need=wAneed + ("yA",) + pnames, mask=("iA",))
+        else:
+            # term1 = sum_B w_cal_B*(y_B - yhat) — the reference's d_i_B holds
+            # the calibrated weights at this point (``PC.R:233``), zero off B
+            blocks["t1"] = Block(left=(ONE, *z), right=(yB, *o), weight=gwB,
+                                 need=wBneed + zn + ("yB",) + pnames, mask=("iB",))
+            blocks["U"] = Block(left=(ONE,), right=o, need=pnames)
+            if eval_model_performance:
+                blocks["res"] = Block(left=(Lin.of("yA"), *o), need=("yA",) + pnames, mask=("iA",))
+                blocks["yv"] = Block(left=(ONE, Lin.of("yA")), need=("yA",), mask=("iA",))
+    m = spark_moments(comb.df, cols, blocks)
+
+    size_A, size_B = m["A"].n, m["calB"].n
+    _check_sizes(size_A, size_B)
+    N_total = _n_total(N_total, comb, m["tot"].n, m["A"].S[0, 0])
+
+    # design weights (``PC.R:149-171``) and the driver-side B calibration
+    a_scale = 1.0 if weights_A is not None else N_total / size_A
+    b_scale = 1.0 if weights_B is not None else N_total / size_B
+    dA = gwA or (Lin(a_scale),)
+    dB = gwB or (Lin(b_scale),)
+    lam = np.zeros(len(z))
+    if z:
+        T_b = m["tot"].S[0] if comb.direct else a_scale * m["A"].S[0, 1:]
+        Gb = b_scale * m["calB"].S
+        lam = _solve_stacked(Gb[None, 1:, 1:], (T_b - Gb[0, 1:])[None, :, None],
+                             "calibrate").ravel()
+    gB = Lin.comb(lam, z, const=1.0)
+    out = dict(weight_col="w_cal_B", rows=lambda: comb.df.where(cols["iB"]).withColumns({
+        "d_i_A": F.expr(f"CASE WHEN {cols['iA']} THEN {dA[0].sql(cols)} ELSE 0.0D END"),
+        "d_i_B": F.expr(dB[0].sql(cols)),
+        "w_cal_B": F.expr(f"{dB[0].sql(cols)} * {gB.sql(cols)}"),
+    }))
+
+    if scenario == 1:
+        need = ("yB",) + wBneed + zn
+        blocks = svymean_blocks(Lin.of("yB"), z, dB, gB, need)
+        est, var = svymean_from(spark_moments(comb.df.where(cols["iB"]), cols, blocks))
+        return PCResult(estimate=est, se=float(np.sqrt(var)), **out)
+
+    if normal:
+        try:
+            beta = ols_from(m["ols"], len(o))
+        except CalibrationError as e:
+            if scenario == 2:
+                raise _intersection_fit_error(e) from e
+            raise
+        lam1 = np.concatenate(([1.0], lam))
+        if scenario == 2:
+            t1 = b_scale * float(lam1 @ m["t1"].S @ beta)
+            t2 = a_scale * float(m["t2"].S[0] @ np.concatenate(([1.0], -beta)))
+            return PCResult(estimate=(t1 + t2) / N_total, model_coef=beta,
+                            model_converged=True, **out)
+        c = np.concatenate(([1.0], -beta))  # y - yhat = [y, o]·c
+        t1 = b_scale * float(lam1 @ m["t1"].S @ c)
+        est = (t1 + float(m["U"].S[0] @ beta)) / N_total
+        rmse = r2 = None
+        if eval_model_performance:
+            rmse, r2 = model_quality(float(c @ m["res"].S @ c), m["res"].n, m["yv"], size_A)
+        return PCResult(estimate=est, model_coef=beta, rmse=rmse, r2=r2,
+                        model_converged=True, **out)
+
+    return _logistic(comb, cols, scenario, o, pnames, resp, dA, dB, gB, N_total, size_A,
+                     eval_model_performance, out)
 
 
-def _fit(sample: DataFrame, formula: Formula, model_type: str):
-    if model_type == "normal":
-        return fit_ols(sample, y_col=formula.response, x_cols=list(formula.predictors),
-                       intercept=formula.intercept)
-    if model_type == "logistic":
-        return fit_logistic(sample, y_col=formula.response, x_cols=list(formula.predictors),
-                            intercept=formula.intercept)
-    raise ValueError("model_type must be 'normal' or 'logistic'")
+def _intersection_fit_error(e: CalibrationError) -> IntegrationError:
+    return IntegrationError(f"cannot fit the prediction model on the S_A ∩ S_B intersection: {e}")
 
 
-def _scenario_2(df, b_df, wB_cal_expr, indA, indB, y_A, outcome_model, model_type,
-                N_total) -> PCResult:
-    """y unobserved in S_B: model on A∩B, combine (``PC.R:255-297``).
-
-    term1 (over S_B) and term2 (over S_A) are indicator-masked sums over the
-    same combined table, so they run as ONE fused aggregation; the empty-
-    intersection case surfaces from the fit's own Gram pass (no pre-count job).
-    """
-    if outcome_model is None:
-        raise ValueError("must provide 'outcome_model' for the prediction model")
-    if not y_A:
-        raise ValueError("must provide 'y_A_col' for the prediction model")
-    formula = Formula.parse(outcome_model).resolve(df.columns)
+def _logistic(comb, cols, scenario, o, pnames, resp, dA, dB, gB, N_total, size_A,
+              eval_model_performance, out) -> PCResult:
+    """Scenarios 2/3 with a logistic outcome model: the Spark IRLS fit on
+    A∩B (scenario 2) or A, then ONE aggregate over its predictions."""
+    fit_df = comb.df.where(cols["iAB" if scenario == 2 else "iA"]).selectExpr(
+        f"{cols[resp]} AS __y__", *[f"{cols[p]} AS __{p}__" for p in pnames]
+    )
     try:
-        fit = _fit(df.filter(indA & indB), formula, model_type)
+        fit = fit_logistic(fit_df, y_col="__y__", x_cols=[f"__{p}__" for p in pnames],
+                           intercept=len(o) > len(pnames))
     except CalibrationError as e:
-        raise IntegrationError(
-            f"cannot fit the prediction model on the S_A ∩ S_B intersection: {e}"
-        ) from e
-    pred = fit.predict_expr()
-
-    # term1 = sum_B w_cal_B * yhat ; term2 = sum_A d_A * (y_A - yhat)
-    row = df.agg(
-        F.sum(F.when(indB, wB_cal_expr * pred)).alias("t1"),
-        F.sum(F.when(indA, F.col("d_i_A") * (F.col(y_A).cast("double") - pred))).alias("t2"),
-    ).collect()[0]
-    est = ((row["t1"] or 0.0) + (row["t2"] or 0.0)) / float(N_total)
-    return PCResult(estimate=float(est), model_coef=fit.coef_for(()), df=b_df,
-                    weight_col="w_cal_B", model_converged=fit.converged)
-
-
-def _scenario_3(
-    df, b_df, wB_cal_expr, indA, indB, y_A, y_B, outcome_model, model_type, N_total,
-    eval_model_performance,
-) -> PCResult:
-    """NMAR DR1 (``PC.R:299-354``):
-    Yhat_DR1 = (sum_B d_B*(y_B - yhat) + sum_U yhat) / N.
-
-    The U-side prediction sum, the A-side residual stats, AND the B-side
-    calibrated residual total are all masked sums over the same combined
-    table — ONE fused aggregation after the model fit."""
-    if outcome_model is None:
-        raise ValueError("must provide 'outcome_model' for the prediction model")
-    if not y_A:
-        raise ValueError("must provide 'y_A_col' for the prediction model")
-    if not y_B:
-        raise ValueError("for scenario 3, 'y_B_col' cannot be None")
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    fit = _fit(df.filter(indA), formula, model_type)
-    pred = fit.predict_expr()
-
-    ya = F.col(y_A).cast("double")
-    # term1 = sum_B w_cal_B * (y_B - yhat)  — the reference's d_i_B holds the
-    # calibrated weights at this point (``PC.R:233``), zero off-B, and the
-    # sum in ``PC.R:325`` therefore only ranges over B rows.
-    stats = df.select(
-        pred.alias("__yhat__"),
-        ya.alias("__ya__"),
-        F.when(indA, 1).otherwise(0).alias("__ia__"),
-        F.when(indB, wB_cal_expr * (F.col(y_B).cast("double") - pred)).alias("__bres__"),
-    ).agg(
-        F.sum("__yhat__").alias("sum_pred_U"),
-        F.sum(F.when(F.col("__ia__") == 1, F.pow(F.col("__ya__") - F.col("__yhat__"), 2))).alias("ssr_A"),
-        F.avg(F.when(F.col("__ia__") == 1, F.pow(F.col("__ya__") - F.col("__yhat__"), 2))).alias("mse_A"),
-        F.var_samp(F.when(F.col("__ia__") == 1, F.col("__ya__"))).alias("var_yA"),
-        F.sum(F.when(F.col("__ia__") == 1, 1).otherwise(0)).alias("n_A"),
-        F.sum("__bres__").alias("t1"),
-    ).collect()[0]
-
-    est = ((stats["t1"] or 0.0) + (stats["sum_pred_U"] or 0.0)) / float(N_total)
-
+        if scenario == 2:
+            raise _intersection_fit_error(e) from e
+        raise
+    beta = fit.coef_for(())
+    eta = Lin.comb(beta, o).sql(cols)
+    pred = f"(1.0D / (1.0D + exp(-{eta})))"
+    iA, iB, yA, yB = cols["iA"], cols["iB"], cols["yA"], cols["yB"]
+    wB = f"{dB[0].sql(cols)} * {gB.sql(cols)}"
+    if scenario == 2:
+        aggs = [f"sum(CASE WHEN {iB} THEN {wB} * {pred} END)",
+                f"sum(CASE WHEN {iA} THEN {dA[0].sql(cols)} * ({yA} - {pred}) END)"]
+    else:
+        res2 = f"CASE WHEN {iA} THEN pow({yA} - {pred}, 2) END"
+        aggs = [f"sum(CASE WHEN {iB} THEN {wB} * ({yB} - {pred}) END)", f"sum({pred})",
+                f"sum({res2})", f"count({res2})",
+                f"count(CASE WHEN {iA} THEN {yA} END)",
+                f"sum(CASE WHEN {iA} THEN {yA} END)",
+                f"sum(CASE WHEN {iA} THEN {yA} * {yA} END)"]
+    r = [0.0 if v is None else v for v in comb.df.selectExpr(*aggs).collect()[0]]
+    est = (r[0] + r[1]) / N_total
     rmse = r2 = None
-    if eval_model_performance:
-        rmse = float((stats["mse_A"] or 0.0) ** 0.5)
-        n_A = int(stats["n_A"])
-        sst = (stats["var_yA"] or 0.0) * (n_A - 1)
-        r2 = 1.0 - (stats["ssr_A"] or 0.0) / sst if sst > 0 else float("nan")
-    return PCResult(estimate=float(est), model_coef=fit.coef_for(()), rmse=rmse, r2=r2,
-                    df=b_df, weight_col="w_cal_B", model_converged=fit.converged)
+    if scenario == 3 and eval_model_performance:
+        yv = Moments(int(r[4]), np.array([[r[4], r[5]], [r[5], r[6]]], dtype=float))
+        rmse, r2 = model_quality(r[2], int(r[3]), yv, size_A)
+    return PCResult(estimate=float(est), model_coef=beta, rmse=rmse, r2=r2,
+                    model_converged=fit.converged, **out)

@@ -21,24 +21,45 @@ Corrections (``RegDI2.R:20``):
        (``RegDI2.R:196-241,309-318``; the reference README documents this
        variance as incomplete — we reproduce the code's formula)
 
-Execution profile per call (at ANY scale — nothing O(N) is collected):
-  1 shuffle for the A/B join (two-table mode only), ONE multi-sum pass for
-  sizes+totals, ONE Gram pass + driver k x k solve for the calibration,
-  2 passes for the calibrated mean + linearized variance.  k = 3 + #aux.
+Execution profile per call (direct mode):
+  ONE moment pass over the combined table (sizes, calibration totals, the
+  A-masked calibration Gram; correction 2 adds the validation-fit sums and
+  the recalibration Gram, correction 3 the population sums Σo, Σoo' of the
+  outcome-model design o = [1, predictors]).  The driver solves the GREG
+  system; the sums that depend on the solved λ (the calibrated svymean
+  variance, the DR terms, the A-side OLS fit) come from sample A's few
+  projected columns collected through Arrow when A has at most
+  ``moments.ROW_BUDGET`` rows, else from one more aggregate over A.  Spark
+  jobs per call: 3 (2 for the moment pass, 1 for the collect).  Two-table
+  mode adds the A/B join to the plan.  Nothing is persisted.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_est_spark.design import SurveyDesign
-from data_integration_est_spark.formula import Formula
+from data_integration_est_spark.formula import Formula, FormulaError
 from data_integration_est_spark.integrate import IntegrationError, integrate_samples
-from data_integration_est_spark.kernels.linalg import calibrate, fit_ols
-from data_integration_est_spark.kernels.stats import svymean
+from data_integration_est_spark.kernels.linalg import _solve_stacked
+from data_integration_est_spark.estimators.moments import (
+    ONE,
+    Block,
+    Lin,
+    as_double,
+    model_quality,
+    ols_from,
+    q,
+    sample_moments,
+    spark_moments,
+    svymean_blocks,
+    svymean_from,
+    var_samp,
+)
 
 
 @dataclass
@@ -47,14 +68,49 @@ class RegDIResult:
     variance: float
     rmse: float | None = None
     r2: float | None = None
-    # The combined table with derived columns (incl. calibrated weights for
-    # corrections 0/1/2) — lazy; callers can inspect or reuse it.
-    df: DataFrame | None = None
     weight_col: str | None = None
+    rows: Callable[[], DataFrame] | None = field(default=None, repr=False, compare=False)
 
     @property
     def se(self) -> float:
         return float(self.variance) ** 0.5
+
+    @property
+    def df(self) -> DataFrame | None:
+        """Sample-A rows with their design (``d_i_A``) and calibrated
+        (``w_cal``) weights: a lazy plan, built on access."""
+        return None if self.rows is None else self.rows()
+
+
+@dataclass
+class Combined:
+    """The combined A/B table and its side-resolved column names."""
+
+    df: DataFrame
+    columns: list[str]
+    ind_A: str
+    ind_B: str
+    y_A: str
+    y_B: str
+    aux_A: list[str]
+    aux_B: list[str]
+    direct: bool
+
+    def base_columns(self, weights_A: str | None, weights_B: str | None = None) -> dict[str, str]:
+        """Named SQL columns every estimator reads: the sample indicators
+        ``iA``/``iB``, the outcomes ``yA``/``yB`` and the weights ``wA``/``wB``."""
+        cols = {
+            "iA": f"{q(self.ind_A)} = 1",
+            "iB": f"{q(self.ind_B)} = 1",
+            "yA": as_double(self.y_A),
+            "yB": as_double(self.y_B),
+        }
+        for name, w in (("wA", weights_A), ("wB", weights_B)):
+            if w is not None:
+                if w not in self.columns:
+                    raise IntegrationError(f"'weights_{name[1]}' column {w!r} not found in the data")
+                cols[name] = as_double(w)
+        return cols
 
 
 def _prepare(
@@ -68,35 +124,80 @@ def _prepare(
     y_A_col,
     y_B_col,
     aux_vars,
-):
-    """Shared combine/validate step (``RegDI2.R:23-88``, ``PC.R:66-132``).
-
-    Returns (df, ind_A, ind_B, y_A, y_B, aux_A, aux_B, data_direct).
-    """
+) -> Combined:
+    """Shared combine/validate step (``RegDI2.R:23-88``, ``PC.R:66-132``)."""
     data_direct = data is not None
     if not data_direct and (data_A is None or data_B is None):
         raise IntegrationError("must provide 'data' or both 'data_A' and 'data_B'")
     aux_vars = list(aux_vars or [])
     if data_direct:
+        columns = data.columns
         for c in [ind_var_A, ind_var_B, y_A_col, y_B_col]:
             if c is None:
                 raise IntegrationError(
                     "direct mode requires 'ind_var_A', 'ind_var_B', 'y_A_col', 'y_B_col'"
                 )
-            if c not in data.columns:
+            if c not in columns:
                 raise IntegrationError(f"column {c!r} not found in 'data'")
         for c in aux_vars:
-            if c not in data.columns:
+            if c not in columns:
                 raise IntegrationError(f"aux column {c!r} not found in 'data'")
-        return data, ind_var_A, ind_var_B, y_A_col, y_B_col, aux_vars, aux_vars, True
+        return Combined(data, columns, ind_var_A, ind_var_B, y_A_col, y_B_col,
+                        aux_vars, aux_vars, True)
     if id_var_A is None or id_var_B is None:
         raise IntegrationError(
             "must specify 'id_var_A' and 'id_var_B' when providing 'data_A' and 'data_B'"
         )
     integ = integrate_samples(data_A, data_B, id_var_A, id_var_B, y_A_col, y_B_col)
-    aux_A = [integ.col_A(c) for c in aux_vars]
-    aux_B = [integ.col_B(c) for c in aux_vars]
-    return integ.df, integ.ind_A, integ.ind_B, integ.y_A, integ.y_B, aux_A, aux_B, False
+    return Combined(
+        integ.df, integ.df.columns, integ.ind_A, integ.ind_B, integ.y_A, integ.y_B,
+        [integ.col_A(c) for c in aux_vars], [integ.col_B(c) for c in aux_vars], False,
+    )
+
+
+def _outcome_model(outcome_model: str, comb: Combined, cols: dict[str, str]):
+    """Parse and resolve the outcome model, adding its predictors (``p0``,
+    ``p1``, ...) and, when it is not y_A, its response (``resp``) to
+    ``cols``.  Returns (design o as Lins, intercept first; predictor names;
+    response name)."""
+    f = Formula.parse(outcome_model)
+    if f.response is None:
+        raise FormulaError(f"the outcome model needs a response: {outcome_model!r}")
+    if not f.predictors and not f.intercept:
+        raise FormulaError(f"the outcome model has no design columns: {outcome_model!r}")
+    resolved = f.resolve(comb.columns)
+    pnames = tuple(f"p{j}" for j in range(len(f.predictors)))
+    present = set(comb.columns)
+    for name, p, r in zip(pnames, f.predictors, resolved.predictors):
+        # a predictor both samples carry reads coalesce(p_A, p_B): resolve()
+        # picks p_A, which is null on every B-only row
+        both = f"{p}_A" in present and f"{p}_B" in present
+        cols[name] = (f"CAST(coalesce({q(p + '_A')}, {q(p + '_B')}) AS DOUBLE)" if both
+                      else as_double(r))
+    response = resolved.response
+    resp = "yA" if response == comb.y_A else "resp"
+    if resp == "resp":
+        cols["resp"] = as_double(response)
+    o = ((ONE,) if f.intercept else ()) + tuple(Lin.of(p) for p in pnames)
+    return o, pnames, resp
+
+
+def _n_total(N_total, comb: Combined, nrows: int, sum_wA: float) -> float:
+    if N_total is not None:
+        return float(N_total)
+    return float(nrows) if comb.direct else float(sum_wA)
+
+
+def _check_n_total(N_total, comb: Combined, weights_A) -> None:
+    if N_total is None and not comb.direct and weights_A is None:
+        raise IntegrationError("to approximate N_total, provide sample-A weights ('weights_A')")
+
+
+def _check_sizes(size_A: int, size_B: int) -> None:
+    if size_A == 0:
+        raise IntegrationError("no units in sample A")
+    if size_B == 0:
+        raise IntegrationError("no units in sample B")
 
 
 def regdi(
@@ -116,176 +217,118 @@ def regdi(
     correction: int = 0,
     eval_model_performance: bool = False,
 ) -> RegDIResult:
-    df, ind_A, ind_B, y_A, y_B, aux_A, aux_B, data_direct = _prepare(
+    if correction not in (0, 1, 2, 3):
+        raise ValueError(f"invalid correction {correction!r}: must be 0, 1, 2 or 3")
+    if correction == 3 and outcome_model is None:
+        raise ValueError("must specify the outcome model via 'outcome_model'")
+    comb = _prepare(
         data, data_A, data_B, id_var_A, id_var_B, ind_var_A, ind_var_B,
         y_A_col, y_B_col, aux_vars,
     )
-    indA = F.col(ind_A) == 1
-    indB = F.col(ind_B) == 1
+    cols = comb.base_columns(weights_A)
+    _check_n_total(N_total, comb, weights_A)
+    iB = cols["iB"]
 
-    # delta_* helper columns (``RegDI2.R:126-141``)
-    df = (
-        df.withColumn("uno", F.lit(1.0))
-        .withColumn("delta_i", F.when(indB, 1.0).otherwise(0.0))
-        .withColumn("delta_yi", F.when(indB, F.col(y_B).cast("double")).otherwise(0.0))
-    )
-    delta_aux = []
-    for z in aux_B:
-        dc = f"delta_{z}"
-        df = df.withColumn(dc, F.when(indB, F.col(z).cast("double")).otherwise(0.0))
-        delta_aux.append(dc)
+    # delta_* calibration columns (``RegDI2.R:126-141``): x = [1, delta_i,
+    # delta_i*y_B, delta_i*aux...], k = 3 + #aux
+    cols["dlt"] = f"CASE WHEN {iB} THEN 1.0D ELSE 0.0D END"
+    cols["dyB"] = f"CASE WHEN {iB} THEN {cols['yB']} ELSE 0.0D END"
+    dz = tuple(f"dz{j}" for j in range(len(comb.aux_B)))
+    for name, z in zip(dz, comb.aux_B):
+        cols[name] = f"CASE WHEN {iB} THEN {as_double(z)} ELSE 0.0D END"
+    x = (ONE, Lin.of("dlt"), Lin.of("dyB"), *map(Lin.of, dz))
+    gw = (Lin.of("wA"),) if weights_A is not None else ()
+    wneed = ("wA",) if weights_A is not None else ()
 
-    # ONE fused pass: row count, sample sizes, weight total, calibration
-    # totals (``RegDI2.R:91-168`` is several sequential sums in R), AND the
-    # calibration Gram.  The Gram over sample A is just an A-masked
-    # weighted sum, so it rides the same full-table aggregation; when
-    # design weights are the constant N/n_A the mask weight is 1 and the
-    # driver scales the collected matrix afterwards.  Net effect:
-    # corrections 0/1 run in TWO data passes total (this one + the
-    # single-pass svymean).
-    x_cols = ["uno", "delta_i", "delta_yi"] + delta_aux
-    k = len(x_cols)
-    if weights_A is not None and weights_A not in df.columns:
-        raise IntegrationError(f"'weights_A' column {weights_A!r} not found in the data")
-    gram_w = (
-        F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-        if weights_A is not None
-        else F.when(indA, 1.0).otherwise(0.0)
-    )
-    xs = [F.col(c).cast("double") for c in x_cols]
-    aggs = [
-        F.count(F.lit(1)).alias("nrows"),
-        F.sum(F.when(indA, 1).otherwise(0)).alias("size_A"),
-        F.sum(F.when(indB, 1).otherwise(0)).alias("size_B"),
-        F.sum("delta_i").alias("t_delta_i"),
-        F.sum("delta_yi").alias("t_delta_yi"),
-        *[F.sum(c).alias(f"t_{c}") for c in delta_aux],
-        *[
-            F.sum(gram_w * xs[i] * xs[j]).alias(f"g_{i}_{j}")
-            for i in range(k) for j in range(i, k)
-        ],
-        *[F.sum(gram_w * xs[i]).alias(f"h_{i}") for i in range(k)],
-    ]
-    if weights_A is not None:
-        aggs.append(
-            F.sum(F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)).alias("sum_wA")
-        )
-    if correction == 2:
-        # Correction 2's y_A ~ y_B validation fit and corrected-outcome total
-        # expand in six extra sums, so they ride THIS pass instead of costing
-        # a Gram job + a t_corr job (``RegDI2.R:250-265`` runs them serially).
-        yAc = F.col(y_A).cast("double")
-        yBc = F.col(y_B).cast("double")
-        ok = indA & indB & yAc.isNotNull() & yBc.isNotNull()
-        aggs += [
-            F.sum(F.when(ok, 1).otherwise(0)).alias("c2_n"),
-            F.sum(F.when(ok, yBc)).alias("c2_syB"),
-            F.sum(F.when(ok, yBc * yBc)).alias("c2_syB2"),
-            F.sum(F.when(ok, yAc)).alias("c2_syA"),
-            F.sum(F.when(ok, yAc * yBc)).alias("c2_syAyB"),
-            # t_corr ingredients: overlap rows contribute (y_A-b0)/b1 whenever
-            # y_A is present (y_B null or not), B-only rows contribute y_B
-            F.sum(F.when(indA & indB, yAc)).alias("c2_syA_all"),
-            F.sum(F.when(indA & indB & yAc.isNotNull(), 1).otherwise(0)).alias("c2_n_all"),
-            F.sum(F.when(indB & ~indA, yBc)).alias("c2_syB_nonA"),
-        ]
-    df = df.persist()
-    tot = df.agg(*aggs).collect()[0]
-
-    size_A, size_B = int(tot["size_A"] or 0), int(tot["size_B"] or 0)
-    if size_A == 0:
-        raise IntegrationError("no units in sample A")
-    if size_B == 0:
-        raise IntegrationError("no units in sample B")
-
-    if N_total is None:
-        if data_direct:
-            N_total = float(tot["nrows"])
-        elif weights_A is not None:
-            N_total = float(tot["sum_wA"])
-        else:
-            raise IntegrationError(
-                "to approximate N_total, provide sample-A weights ('weights_A')"
-            )
-
-    # design weights d_i_A (``RegDI2.R:106-116``)
-    if weights_A is not None:
-        d_expr = F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-        d_scale = 1.0  # Gram already collected under the real weights
-    else:
-        d_scale = float(N_total) / size_A
-        d_expr = F.when(indA, F.lit(d_scale)).otherwise(0.0)
-    df = df.withColumn("d_i_A", d_expr)
-
-    # calibration totals (``RegDI2.R:143-168``) and the driver-side GREG
-    # solve: (sum_A d x x') lam = T - sum_A d x  (``RegDI2.R:188-193``)
-    totals = {
-        "uno": float(tot["nrows"]) if data_direct else float(N_total),
-        "delta_i": float(tot["t_delta_i"]),
-        "delta_yi": float(tot["t_delta_yi"]),
-        **{c: float(tot[f"t_{c}"]) for c in delta_aux},
+    # The moment pass (``RegDI2.R:91-168`` is several sequential sums in R):
+    # row count and calibration totals, sample sizes, and the calibration
+    # Gram — an A-masked sum, weighted by weights_A or by 1 (the driver
+    # scales it by the constant N/n_A).
+    blocks = {
+        "tot": Block(left=(ONE,), right=x),
+        "cal": Block(left=x, weight=gw, mask=("iA",)),
+        "B": Block(mask=("iB",)),
     }
-    import numpy as np
+    if correction == 2:
+        # The y_A ~ y_B validation fit, the corrected outcome total and the
+        # recalibration Gram are all masked sums known before the fit, so
+        # they ride this pass (``RegDI2.R:250-265`` runs them serially).
+        cols["iAB"] = f"({cols['iA']}) AND ({iB})"
+        cols["iBnA"] = f"({iB}) AND NOT ({cols['iA']})"
+        cols["dyA"] = f"CASE WHEN {iB} THEN {cols['yA']} ELSE 0.0D END"
+        yA, yB = Lin.of("yA"), Lin.of("yB")
+        blocks["val"] = Block(left=(ONE, yB, yA), need=("yA", "yB"), mask=("iAB",))
+        blocks["ovA"] = Block(left=(ONE,), right=(yA,), need=("yA",), mask=("iAB",))
+        blocks["nonA"] = Block(left=(ONE,), right=(yB,), mask=("iBnA",))
+        blocks["u"] = Block(left=(ONE, Lin.of("dlt"), Lin.of("dyA"), *map(Lin.of, dz)),
+                            weight=gw, need=wneed + ("dyA",) + dz, mask=("iA",))
+    if correction == 3:
+        o, pnames, resp = _outcome_model(outcome_model, comb, cols)
+        blocks["U"] = Block(left=(ONE, *map(Lin.of, pnames)), need=pnames)
+    m = spark_moments(comb.df, cols, blocks)
 
-    from data_integration_est_spark.kernels.gram import dot_expr
-    from data_integration_est_spark.kernels.linalg import _solve_stacked
+    size_A, size_B = m["cal"].n, m["B"].n
+    _check_sizes(size_A, size_B)
+    N_total = _n_total(N_total, comb, m["tot"].n, m["cal"].S[0, 0])
 
-    G = np.zeros((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            G[i, j] = G[j, i] = d_scale * float(tot[f"g_{i}_{j}"] or 0.0)
-    h = np.array([d_scale * float(tot[f"h_{i}"] or 0.0) for i in range(k)])
-    T = np.array([totals[c] for c in x_cols])
-    lam = _solve_stacked(G[None, ...], (T - h)[None, :, None], "calibrate").ravel()
+    # design weights d_i_A (``RegDI2.R:106-116``) and the driver-side GREG
+    # solve (sum_A d x x') lam = T - sum_A d x  (``RegDI2.R:188-193``)
+    d_scale = 1.0 if weights_A is not None else N_total / size_A
+    dA = gw or (Lin(d_scale),)
+    T = m["tot"].S[0].copy()
+    T[0] = float(m["tot"].n) if comb.direct else N_total
+    G = d_scale * m["cal"].S
+    lam = _solve_stacked(G[None], (T - G[0])[None, :, None], "calibrate").ravel()
+    g = Lin.comb(lam, x, const=1.0)
+    a_rows = comb.df.where(cols["iA"])
 
-    w_cal_expr = F.col("d_i_A") * (F.lit(1.0) + dot_expr(x_cols, lam))
-    sample_A = df.filter(indA).withColumn("w_cal", w_cal_expr)
-    cal_design = SurveyDesign(
-        df=sample_A, weight_col="w_cal", calibration_cols=x_cols, base_weight_col="d_i_A"
+    if correction in (0, 1):
+        need = ("yA", "dyB") + dz + wneed
+        mean, var = svymean_from(
+            sample_moments(a_rows, cols, svymean_blocks(Lin.of("yA"), x, dA, g, need), size_A)
+        )
+        return RegDIResult(mean=mean, variance=var, weight_col="w_cal",
+                           rows=lambda: _weighted_rows(a_rows, cols, dA, g))
+    if correction == 2:
+        return _correction_2(m, cols, a_rows, x, T, d_scale, dA, dz, wneed, size_A)
+    return _correction_3(
+        m, cols, a_rows, dA, g, o, pnames, resp, ("dyB",) + dz + wneed, N_total, size_A,
+        eval_model_performance,
     )
 
-    try:
-        if correction in (0, 1):
-            est = svymean(cal_design, y_A)[0]
-            return RegDIResult(mean=est.estimate, variance=est.variance,
-                               df=sample_A, weight_col="w_cal")
-        if correction == 2:
-            return _correction_2(df, tot, indA, indB, y_A, y_B, delta_aux, totals)
-        if correction == 3:
-            return _correction_3(
-                df, sample_A, w_cal_expr, indA, y_A, N_total, size_A,
-                outcome_model, eval_model_performance,
-            )
-        raise ValueError(f"invalid correction {correction!r}: must be 0, 1, 2 or 3")
-    finally:
-        df.unpersist()
+
+def _weighted_rows(a_rows: DataFrame, cols: dict[str, str], dA: tuple[Lin, ...],
+                   g: Lin) -> DataFrame:
+    """Sample-A rows with ``d_i_A`` and ``w_cal = d_i_A * g`` columns."""
+    d_sql = dA[0].sql(cols)
+    return a_rows.withColumns({
+        "d_i_A": F.expr(d_sql),
+        "w_cal": F.expr(f"{d_sql} * {g.sql(cols)}"),
+    })
 
 
-def _correction_2(df, tot, indA, indB, y_A, y_B, delta_aux, totals) -> RegDIResult:
+def _correction_2(m, cols, a_rows, x, T, d_scale, dA, dz, wneed, size_A) -> RegDIResult:
     """Measurement-error correction (``RegDI2.R:250-307``).
 
-    The y_A ~ y_B validation OLS and the corrected-outcome total t_corr are
-    both closed forms in the six ``c2_*`` sums collected by the main fused
-    pass, so correction 2 adds NO data pass before the recalibration Gram
-    (the reference runs ``lm`` + a separate sum serially, ``RegDI2.R:254-265``).
+    The y_A ~ y_B validation OLS, the corrected-outcome total t_corr and the
+    recalibration Gram are closed forms in sums the moment pass collected:
+    the corrected calibration vector is a linear map of
+    u = [1, delta_i, delta_i*y_A, delta_i*aux], so its Gram is T G_u T'.
+    Only the recalibrated svymean needs sample A's rows.
     """
-    import numpy as np
-
-    from data_integration_est_spark.kernels.linalg import _solve_stacked
-
-    n_ov = int(tot["c2_n"] or 0)
+    v = m["val"]
+    n_ov = v.n
     if n_ov < 2:
         # the reference's validation-data guard (``RegDI2.R:254-255``)
         raise IntegrationError(
             f"insufficient validation data for correction 2: {n_ov} usable "
             "S_A ∩ S_B overlap row(s), need >= 2 with y_A and y_B observed"
         )
-    s_yB = float(tot["c2_syB"] or 0.0)
-    s_yA = float(tot["c2_syA"] or 0.0)
-    G = np.array([[float(n_ov), s_yB], [s_yB, float(tot["c2_syB2"] or 0.0)]])
-    rhs = np.array([s_yA, float(tot["c2_syAyB"] or 0.0)])
-    b0, b1 = (float(v) for v in
-              _solve_stacked(G[None], rhs[None, :, None], "correction-2 fit").ravel())
+    S = v.S  # moments of [1, y_B, y_A] on the overlap
+    Gv = np.array([[float(n_ov), S[0, 1]], [S[0, 1], S[1, 1]]])
+    b0, b1 = (float(c) for c in
+              _solve_stacked(Gv[None], np.array([S[0, 2], S[1, 2]])[None, :, None],
+                             "correction-2 fit").ravel())
     if abs(b1) < 1e-10:
         raise IntegrationError(
             f"correction 2: fitted slope b1={b1:.3e} is numerically zero — "
@@ -293,79 +336,69 @@ def _correction_2(df, tot, indA, indB, y_A, y_B, delta_aux, totals) -> RegDIResu
             "between y_A and y_B on the validation overlap)"
         )
 
-    # y_corrected: de-biased y_A on A rows, raw y_B elsewhere (``RegDI2.R:264-265``)
-    y_corr = F.when(indA, (F.col(y_A).cast("double") - F.lit(b0)) / F.lit(b1)).otherwise(
-        F.col(y_B).cast("double")
-    )
-    df = df.withColumn("y_corrected", y_corr).withColumn(
-        "delta_yi_corrected", F.when(indB, F.col("y_corrected")).otherwise(0.0)
-    )
+    # y_corrected: de-biased y_A on A rows, raw y_B elsewhere (``RegDI2.R:264-265``);
     # sum_B y_corrected = (sum_{A∩B} y_A − n·b0)/b1 + sum_{B∖A} y_B
-    t_corr = (float(tot["c2_syA_all"] or 0.0) - float(tot["c2_n_all"] or 0) * b0) / b1 \
-        + float(tot["c2_syB_nonA"] or 0.0)
+    ov = m["ovA"]
+    T2 = T.copy()
+    T2[2] = (ov.S[0, 0] - ov.n * b0) / b1 + m["nonA"].S[0, 0]
+    Tm = np.eye(len(x))
+    Tm[2, 1:3] = [-b0 / b1, 1.0 / b1]
+    G2 = d_scale * (Tm @ m["u"].S @ Tm.T)
+    lam2 = _solve_stacked(G2[None], (T2 - G2[0])[None, :, None], "calibrate").ravel()
 
-    x_corr = ["uno", "delta_i", "delta_yi_corrected"] + delta_aux
-    totals_corr = {
-        "uno": totals["uno"],
-        "delta_i": totals["delta_i"],
-        "delta_yi_corrected": float(t_corr),
-        **{c: totals[c] for c in delta_aux},
-    }
-    cal = calibrate(df.filter(indA), x_corr, totals_corr, d_col="d_i_A", out_col="w_cal")
-    design = SurveyDesign(
-        df=cal.df, weight_col="w_cal", calibration_cols=x_corr, base_weight_col="d_i_A"
+    x_corr = (ONE, Lin.of("dlt"), Lin.comb(Tm[2, 1:3], [Lin.of("dlt"), Lin.of("dyA")]),
+              *map(Lin.of, dz))
+    g2 = Lin.comb(lam2, x_corr, const=1.0)
+    y_corr = Lin.comb([1.0 / b1], [Lin.of("yA")], const=-b0 / b1)
+    need = ("yA", "dyA") + dz + wneed
+    mean, var = svymean_from(
+        sample_moments(a_rows, cols, svymean_blocks(y_corr, x_corr, dA, g2, need), size_A)
     )
-    est = svymean(design, "y_corrected")[0]
-    return RegDIResult(mean=est.estimate, variance=est.variance, df=cal.df, weight_col="w_cal")
+    return RegDIResult(mean=mean, variance=var, weight_col="w_cal",
+                       rows=lambda: _weighted_rows(a_rows, cols, dA, g2))
 
 
-def _correction_3(
-    df, cal_df, w_cal_expr, indA, y_A, N_total, size_A, outcome_model,
-    eval_model_performance,
-) -> RegDIResult:
+def _correction_3(m, cols, a_rows, dA, g, o, pnames, resp, x_need, N_total, size_A,
+                  eval_model_performance) -> RegDIResult:
     """Doubly-robust estimator (``RegDI2.R:196-241``).
 
     T_DR = (sum_A w_cal*(y - yhat) + sum_U yhat) / N
     V_DR = var(w_cal*(y - yhat))/n_A + var_U(yhat)/N      (the code's ad-hoc
     variance at ``RegDI2.R:222-225`` — reproduced as-is, see module doc).
 
-    The A-side residual stats and the population-side prediction stats are
-    indA-masked sums over the SAME table, so they run as one fused pass
-    (null-skipping aggregates implement the mask for free).
+    With yhat = o'beta every term is a quadratic form in moments: the OLS
+    Gram and the w_cal- and w_cal²-weighted moments of [y_A, o] over sample
+    A, and Σ_U o, Σ_U oo' from the moment pass.
     """
-    if outcome_model is None:
-        raise ValueError("must specify the outcome model via 'outcome_model'")
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    fit = fit_ols(
-        df.filter(indA), y_col=formula.response, x_cols=list(formula.predictors),
-        intercept=formula.intercept,
-    )
-    pred = fit.predict_expr()
+    yA = Lin.of("yA")
+    w = dA + (g,)
+    need = ("yA",) + x_need + pnames
+    blocks = {
+        "ols": Block(left=(*o, Lin.of(resp)), need=(resp,) + pnames),
+        "dr1": Block(left=(ONE,), right=(yA, *o), weight=w, need=need),
+        "dr2": Block(left=(yA, *o), weight=w + w, need=need),
+    }
+    if eval_model_performance:
+        blocks["res"] = Block(left=(yA, *o), need=("yA",) + pnames)
+        blocks["yv"] = Block(left=(ONE, yA), need=("yA",))
+    a = sample_moments(a_rows, cols, blocks, size_A)
 
-    y = F.col(y_A).cast("double")
-    res = y - pred
-    wres = F.when(indA, w_cal_expr * res)  # null off-A -> skipped by the aggs
-    stats = df.agg(
-        F.sum(wres).alias("sum_wres"),
-        F.var_samp(wres).alias("var_wres"),
-        F.sum(F.when(indA, F.pow(res, 2))).alias("ssr"),
-        F.avg(F.when(indA, F.pow(res, 2))).alias("mse"),
-        F.var_samp(F.when(indA, y)).alias("var_y"),
-        F.sum(F.when(indA, 1).otherwise(0)).alias("n"),
-        F.sum(pred).alias("sum_pred"),
-        F.var_samp(pred).alias("var_pred"),
-    ).collect()[0]
-    a_stats = u_stats = stats
-    full = cal_df  # A rows only, carries the w_cal column (returned to caller)
+    beta = ols_from(a["ols"], len(o))
+    c = np.concatenate(([1.0], -beta))  # y_A - yhat = [y_A, o]·c
+    sum_wres = float(a["dr1"].S[0] @ c)
+    var_wres = var_samp(a["dr1"].n, sum_wres, float(c @ a["dr2"].S @ c))
 
-    n_A = int(a_stats["n"])
-    T_DR = ((a_stats["sum_wres"] or 0.0) + (u_stats["sum_pred"] or 0.0)) / float(N_total)
-    V_DR = (a_stats["var_wres"] or 0.0) / n_A + (u_stats["var_pred"] or 0.0) / float(N_total)
+    U = m["U"]
+    io = slice(0, None) if len(o) == U.S.shape[0] else slice(1, None)
+    sum_pred = float(U.S[0, io] @ beta)
+    var_pred = var_samp(U.n, sum_pred, float(beta @ U.S[io, io] @ beta))
+
+    T_DR = (sum_wres + sum_pred) / N_total
+    V_DR = var_wres / size_A + var_pred / N_total
 
     rmse = r2 = None
     if eval_model_performance:
-        rmse = float((a_stats["mse"] or 0.0) ** 0.5)
-        sst = (a_stats["var_y"] or 0.0) * (n_A - 1)
-        r2 = 1.0 - (a_stats["ssr"] or 0.0) / sst if sst > 0 else float("nan")
+        ssr = float(c @ a["res"].S @ c)
+        rmse, r2 = model_quality(ssr, a["res"].n, a["yv"], size_A)
     return RegDIResult(mean=float(T_DR), variance=float(V_DR), rmse=rmse, r2=r2,
-                       df=full, weight_col="w_cal")
+                       weight_col="w_cal", rows=lambda: _weighted_rows(a_rows, cols, dA, g))
