@@ -4,15 +4,14 @@ The reference computes ONE population-level estimate per call
 (``RegDI2.R:244-248``, ``PC.R:240-253``); its ecosystem's standard next
 question is "the same estimate per domain" (region, stratum, source, ...)
 — ``survey::svyby`` in R.  Here that is not a loop over domains: the
-grouped vectorized engine (``estimators/vectorized.py``) already computes
-every group in the SAME ~4-6 shuffles as a single estimate — domains ride
-the groupBy keys, the per-domain k x k solves are one stacked driver
-solve, and only O(k^2 * domains) scalars leave the executors.  These
-wrappers expose that engine as a user-facing API returning a tidy
-DataFrame, one row per domain.
+grouped estimators (``estimators/vectorized.py``) run the single-call
+estimator's moment pass as ONE grouped aggregate, with the same Spark jobs
+as a single estimate, and its driver math once per domain.  These wrappers
+expose them as a user-facing API returning a tidy DataFrame, one row per
+domain (plus one grouped pass for the sample sizes).
 
-Scale: identical plan shape at 5 domains or 50k domains — the shuffle
-count is fixed; more domains just widen the (tiny) driver solve batch.
+Scale: identical plan shape at 5 domains or 50k domains — more domains
+just mean more groups in the aggregate and more small driver solves.
 """
 
 from __future__ import annotations

@@ -21,21 +21,31 @@ block's rows are those where every ``mask`` column is true and every
 ``need`` column is non-null; inside those rows, a product with a null
 factor is skipped (SQL ``sum``) or counts zero (numpy), which is the same
 sum.
+
+With ``group_cols`` both evaluate every group at once (the Monte Carlo
+grid, domains): one ``groupBy`` aggregate, or one Arrow collect split by
+key.  Blocks whose coefficients differ between groups (a per-group GREG
+multiplier, a per-group model fit) are given per key; the numpy path
+evaluates each group's own blocks, the Spark path reads the differing
+coefficients from a broadcast per-group table.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from data_integration_est_spark.kernels.linalg import (
     CalibrationError,
     _solve_ols_stacked,
     _solve_stacked,
 )
+from data_integration_est_spark.util import local_df
 
 # Samples of at most this many rows are collected through Arrow and summed
 # on the driver; larger ones get one more Spark aggregate.  The crossover,
@@ -64,12 +74,19 @@ def as_double(col: str) -> str:
     return f"CAST({q(col)} AS DOUBLE)"
 
 
+def _logit_sql(inner: str) -> str:
+    return f"(1.0D / (1.0D + exp(-{inner})))"
+
+
 @dataclass(frozen=True)
 class Lin:
-    """``const + Σ coef·column``: a per-row linear form over named columns."""
+    """``const + Σ coef·column``: a per-row linear form over named columns;
+    with ``logit``, the inverse-logit of that form (a logistic model's
+    prediction)."""
 
     const: float = 0.0
     terms: tuple[tuple[str, float], ...] = ()
+    logit: bool = False
 
     @classmethod
     def of(cls, name: str) -> "Lin":
@@ -80,6 +97,7 @@ class Lin:
         """``const + Σ coefs[i]·lins[i]``, merged into one form."""
         acc: dict[str, float] = {}
         for a, lin in zip(coefs, lins):
+            assert not lin.logit, "a linear combination of inverse-logit forms"
             a = float(a)
             const += a * lin.const
             for name, c in lin.terms:
@@ -88,7 +106,7 @@ class Lin:
 
     @property
     def is_one(self) -> bool:
-        return not self.terms and self.const == 1.0
+        return not self.terms and self.const == 1.0 and not self.logit
 
     def sql(self, env: dict[str, str] | None = None) -> str:
         """SQL text; ``env`` maps a name to its defining expression (by
@@ -96,13 +114,14 @@ class Lin:
         ref = (lambda n: f"({env[n]})") if env is not None else q
         parts = [lit(self.const)] if self.const != 0.0 or not self.terms else []
         parts += [ref(n) if c == 1.0 else f"{lit(c)} * {ref(n)}" for n, c in self.terms]
-        return parts[0] if len(parts) == 1 else "(" + " + ".join(parts) + ")"
+        out = parts[0] if len(parts) == 1 else "(" + " + ".join(parts) + ")"
+        return _logit_sql(out) if self.logit else out
 
     def eval(self, cols: dict[str, np.ndarray]):
         out = self.const
         for name, c in self.terms:
             out = out + c * cols[name]
-        return out
+        return 1.0 / (1.0 + np.exp(-out)) if self.logit else out
 
 
 ONE = Lin(1.0)
@@ -183,35 +202,147 @@ def _needed(blocks: dict[str, Block]) -> list[str]:
     return sorted(set().union(*(b.names() for b in blocks.values())))
 
 
-def spark_moments(frame: DataFrame, cols: dict[str, str],
-                  blocks: dict[str, Block]) -> dict[str, Moments]:
-    """Every block's sums in ONE aggregate over ``frame``; ``cols`` maps a
-    name to the SQL that defines it on ``frame``."""
-    proj = [f"{cols[n]} AS {q(n)}" for n in _needed(blocks)]
+def _projection(cols: dict[str, str], names) -> list[str]:
+    return [f"{cols[n]} AS {q(n)}" for n in names]
+
+
+def _aggregates(blocks: dict[str, Block]) -> tuple[list[str], dict]:
     aggs: list[str] = []
     spans = {}
     for key, b in blocks.items():
         e = b.exprs()
         spans[key] = (len(aggs), len(aggs) + len(e))
         aggs += e
-    row = frame.selectExpr(*proj).selectExpr(
-        *[f"{e} AS m{i}" for i, e in enumerate(aggs)]
-    ).collect()[0]
-    vals = list(row)
+    return aggs, spans
+
+
+def _unpack(blocks: dict[str, Block], spans: dict, vals: list) -> dict[str, Moments]:
     return {key: blocks[key].unpack(vals[a:b]) for key, (a, b) in spans.items()}
 
 
-def sample_moments(frame: DataFrame, cols: dict[str, str], blocks: dict[str, Block],
-                   n_rows: int) -> dict[str, Moments]:
+def _group_select(group_cols: list[str]) -> list[str]:
+    # the keys ride under internal names, so a group column can never
+    # shadow one of the estimators' named columns
+    return [f"{q(c)} AS __g{i}" for i, c in enumerate(group_cols)]
+
+
+def broadcast_by_key(frame: DataFrame, group_cols: list[str], values: dict[tuple, list],
+                     names: list[str]) -> DataFrame:
+    """Inner-join per-group driver scalars (DOUBLE columns ``names``) onto
+    ``frame`` as a broadcast table; a null key matches a null key."""
+    schema = StructType(list(frame.select(*group_cols).schema.fields)
+                        + [StructField(n, DoubleType(), False) for n in names])
+    rows = [tuple(key) + tuple(float(v) for v in vals) for key, vals in values.items()]
+    table = local_df(frame.sparkSession, rows, schema)
+    on = [frame[q(c)].eqNullSafe(table[q(c)]) for c in group_cols]
+    return frame.join(F.broadcast(table), on=on, how="inner").drop(
+        *[table[q(c)] for c in group_cols])
+
+
+def spark_moments(frame: DataFrame, cols: dict[str, str], blocks: dict,
+                  group_cols: list[str] | None = None) -> dict:
+    """Every block's sums in ONE aggregate over ``frame``; ``cols`` maps a
+    name to the SQL that defines it on ``frame``.
+
+    With ``group_cols`` the aggregate is grouped and the result maps each
+    group key to its moments.  ``blocks`` may then map each group key to
+    that group's own blocks (same names and shapes, group-specific
+    coefficients); only those keys are returned."""
+    if not group_cols:
+        aggs, spans = _aggregates(blocks)
+        row = frame.selectExpr(*_projection(cols, _needed(blocks))).selectExpr(
+            *[f"{e} AS m{i}" for i, e in enumerate(aggs)]
+        ).collect()[0]
+        return _unpack(blocks, spans, list(row))
+    if not blocks:
+        return {}
+    keyed = not isinstance(next(iter(blocks.values())), Block)
+    shared = blocks
+    if keyed:
+        frame, cols, shared = _lift(frame, cols, blocks, group_cols)
+    aggs, spans = _aggregates(shared)
+    ng = len(group_cols)
+    rows = (
+        frame.selectExpr(*_group_select(group_cols), *_projection(cols, _needed(shared)))
+        .groupBy(*[f"__g{i}" for i in range(ng)])
+        .agg(*[F.expr(f"{e} AS m{i}") for i, e in enumerate(aggs)])
+        .collect()
+    )
+    out = {tuple(r[:ng]): _unpack(shared, spans, list(r[ng:])) for r in rows}
+    return {k: out[k] for k in blocks if k in out} if keyed else out
+
+
+def _lift(frame: DataFrame, cols: dict[str, str], blocks: dict, group_cols: list[str]):
+    """One set of blocks for every group: each Lin whose coefficients
+    differ between groups becomes a named column whose coefficients are
+    read from a broadcast per-group table.  Returns (joined frame,
+    extended cols, shared blocks)."""
+    keys = list(blocks)
+    cols, params, shared = dict(cols), {key: [] for key in keys}, {}
+    for name, b in blocks[keys[0]].items():
+        fields = {}
+        for fld in ("left", "right", "weight"):
+            if getattr(b, fld) is not None:
+                fields[fld] = tuple(
+                    _lift_lin(cols, params, [getattr(blocks[k][name], fld)[i] for k in keys])
+                    for i in range(len(getattr(b, fld)))
+                )
+        shared[name] = replace(b, **fields)
+    n = len(params[keys[0]])
+    if n:
+        frame = broadcast_by_key(frame, group_cols, params, [f"__k{j}" for j in range(n)])
+    return frame, cols, shared
+
+
+def _lift_lin(cols: dict[str, str], params: dict[tuple, list], per: list[Lin]) -> Lin:
+    """One Lin position across the groups (in ``params`` order): kept when
+    every group has the same Lin, else a column of per-group coefficients."""
+    lin = per[0]
+    if all(v == lin for v in per):
+        return lin
+    assert all(v.logit == lin.logit and [t for t, _ in v.terms] == [t for t, _ in lin.terms]
+               for v in per)
+    k0 = len(next(iter(params.values())))
+    ks = [q(f"__k{k0 + j}") for j in range(len(lin.terms) + 1)]
+    form = " + ".join([ks[0]] + [f"{k} * ({cols[t]})" for k, (t, _) in zip(ks[1:], lin.terms)])
+    col = f"__L{len(cols)}"
+    cols[col] = _logit_sql(f"({form})") if lin.logit else form
+    for v, vals in zip(per, params.values()):
+        vals += [v.const, *(c for _, c in v.terms)]
+    return Lin.of(col)
+
+
+def sample_moments(frame: DataFrame, cols: dict[str, str], blocks: dict, n_rows: int,
+                   group_cols: list[str] | None = None) -> dict:
     """The blocks over one (pre-filtered) sample of ``n_rows`` rows: summed
     in numpy from an Arrow collect when ``n_rows <= ROW_BUDGET``, else by
-    :func:`spark_moments`."""
+    :func:`spark_moments`.  With ``group_cols``, ``blocks`` maps each group
+    key to its own blocks (as in :func:`spark_moments`) and ``n_rows``
+    counts the sample's rows over all groups."""
+    if not group_cols:
+        if n_rows > ROW_BUDGET:
+            return spark_moments(frame, cols, blocks)
+        names = _needed(blocks)
+        tbl = frame.selectExpr(*_projection(cols, names)).toArrow()
+        arrs = {n: tbl.column(n).to_numpy(zero_copy_only=False) for n in names}
+        return {key: b.eval_np(arrs, tbl.num_rows) for key, b in blocks.items()}
     if n_rows > ROW_BUDGET:
-        return spark_moments(frame, cols, blocks)
-    names = _needed(blocks)
-    tbl = frame.selectExpr(*[f"{cols[n]} AS {q(n)}" for n in names]).toArrow()
+        return spark_moments(frame, cols, blocks, group_cols)
+    if not blocks:
+        return {}
+    names = sorted(set().union(*(_needed(b) for b in blocks.values())))
+    tbl = frame.selectExpr(*_group_select(group_cols), *_projection(cols, names)).toArrow()
+    rows: dict[tuple, list[int]] = {}
+    for i, key in enumerate(zip(*(tbl.column(f"__g{j}").to_pylist()
+                                  for j in range(len(group_cols))))):
+        rows.setdefault(key, []).append(i)
     arrs = {n: tbl.column(n).to_numpy(zero_copy_only=False) for n in names}
-    return {key: b.eval_np(arrs, tbl.num_rows) for key, b in blocks.items()}
+    out = {}
+    for key, bl in blocks.items():
+        idx = np.asarray(rows.get(key, ()), dtype=np.intp)
+        sub = {n: a[idx] for n, a in arrs.items()}
+        out[key] = {name: b.eval_np(sub, len(idx)) for name, b in bl.items()}
+    return out
 
 
 # ------------------------------------------------------------ driver math

@@ -1,629 +1,350 @@
-"""Replicate-vectorized estimators — the Monte Carlo engine.
+"""Grouped estimators — the Monte Carlo engine and the domain estimators.
 
 The reference runs its Monte Carlo studies as a serial R loop
-(``nb[4]:29-196``) or a ``parLapply`` process pool over (gamma, sim) cells
-(``nb[23]:130-143``).  Here the replicate and grid dimensions are ordinary
-key columns of ONE DataFrame and every estimator below computes ALL cells
-at once: per-group totals are a single groupBy pass, the per-group k x k
-calibration/OLS solves are one stacked ``numpy.linalg.solve`` on the
-driver, and the solved vectors return to executors via a broadcast join.
-Per full estimator-suite-on-a-grid: ~4-6 shuffles TOTAL, independent of
-the number of replicates — the 100 TB-shaped replacement for a process
-pool.
+(``nb[4]:29-196``) or a ``parLapply`` pool over (gamma, sim) cells
+(``nb[23]:130-143``).  Here the grid dimensions are key columns of ONE
+DataFrame, and each estimator runs every cell with the code of the single
+call (``regdi``/``pc_estimator``): its moment pass becomes one ``groupBy``
+aggregate, sample A's sums one Arrow collect split by key (above
+``moments.ROW_BUDGET`` rows, one grouped aggregate over a broadcast table
+of each group's coefficients), and its driver math runs once per group.
+Spark jobs per call stay within the single call's, whatever the number of
+groups.
 
-Only O(k^2 * groups) scalars ever reach the driver (k <= ~6, groups =
-|grid| x n_sim — thousands).  Group keys must not be named like internal
-columns (``uno``, ``delta_*``, ``d_i_A``...).
-
+A group with an empty sample is left out; a group whose outcome model
+cannot be fit (fewer rows than design columns, or too little validation
+data for correction 2) gets NaN and counts in ``diag['degenerate_groups']``.
 Each function returns ``{group_key_tuple: (estimate, se | None)}``.
 """
 
 from __future__ import annotations
 
+import math
+from dataclasses import replace
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
-from data_integration_est_spark.design import SurveyDesign
-from data_integration_est_spark.formula import Formula
-from data_integration_est_spark.kernels.linalg import calibrate, fit_logistic, fit_ols
-from data_integration_est_spark.kernels.stats import svymean
-from data_integration_est_spark.util import local_df
+from data_integration_est_spark.estimators.moments import (
+    ONE,
+    Block,
+    Lin,
+    as_double,
+    broadcast_by_key,
+    ols_from,
+    q,
+    sample_moments,
+    spark_moments,
+    svymean_from,
+    var_samp,
+)
+from data_integration_est_spark.estimators.pc import (
+    fit_logistic_on,
+    pc_a_scale,
+    pc_calibrate,
+    pc_logistic_blocks,
+    pc_logistic_finish,
+    pc_normal,
+    pc_plan,
+    pc_s1_blocks,
+)
+from data_integration_est_spark.estimators.regdi import (
+    Combined,
+    EmptySample,
+    pred_stats,
+    regdi_dr,
+    regdi_plan,
+    regdi_step,
+)
+from data_integration_est_spark.integrate import IntegrationError
+from data_integration_est_spark.kernels.linalg import FitResult, fit_ols
+
+NAN = float("nan")
 
 
-def _fit_grouped(sample: DataFrame, formula: Formula, model_type: str, group_cols):
-    if model_type == "normal":
-        return fit_ols(sample, y_col=formula.response, x_cols=list(formula.predictors),
-                       intercept=formula.intercept, group_cols=group_cols)
-    if model_type == "logistic":
-        return fit_logistic(sample, y_col=formula.response,
-                            x_cols=list(formula.predictors),
-                            intercept=formula.intercept, group_cols=group_cols)
-    raise ValueError("model_type must be 'normal' or 'logistic'")
+def _combined(df: DataFrame, ind_A, ind_B, y_A, y_B, aux_vars, weights_A=None) -> Combined:
+    """The grid as a combined table, each group its own population; with
+    ``weights_A`` N is the A weight sum (the reference's two-table shape)."""
+    aux = list(aux_vars or [])
+    return Combined(df, df.columns, ind_A, ind_B, y_A, y_B, aux, aux, weights_A is None)
 
 
-def _note_fit(diag: dict | None, fit) -> None:
-    """Accumulate fit-health counters into a caller-supplied dict — the
-    Monte Carlo harness surfaces these on MCResult.diagnostics so silent
-    numerical issues in big grids (unconverged IRLS, undersized cells)
-    are visible without scraping warnings."""
+def _note_fit(diag: dict | None, fit=None, degenerate: int = 0) -> None:
+    """Fit-health counters for MCResult.diagnostics: silent numerical
+    trouble in a big grid (unconverged IRLS, undersized cells) shows
+    without scraping warnings."""
     if diag is None:
         return
     diag["n_fits"] = diag.get("n_fits", 0) + 1
-    if fit.kind == "logistic" and not fit.converged:
-        diag["unconverged"] = diag.get("unconverged", 0) + 1
-    diag["degenerate_groups"] = (
-        diag.get("degenerate_groups", 0) + len(fit.degenerate_keys)
-    )
+    if fit is not None:
+        degenerate += len(fit.degenerate_keys)
+        if fit.kind == "logistic" and not fit.converged:
+            diag["unconverged"] = diag.get("unconverged", 0) + 1
+    diag["degenerate_groups"] = diag.get("degenerate_groups", 0) + degenerate
 
 
-def _broadcast_scalars(
-    df: DataFrame, group_cols: list[str], values: dict[tuple, tuple], names: list[str]
-) -> DataFrame:
-    """Broadcast-join per-group driver scalars back onto the big table."""
-    spark = df.sparkSession
-    rows = [tuple(k) + tuple(float(v) for v in vals) for k, vals in values.items()]
-    key_schema = df.select(*group_cols).schema
-    schema = StructType(
-        list(key_schema.fields) + [StructField(n, DoubleType(), False) for n in names]
-    )
-    sdf = local_df(spark, rows, schema)
-    return df.join(F.broadcast(sdf), on=group_cols, how="inner")
+def _ols_fit(ms: dict, p, group_cols: list[str]) -> FitResult:
+    """Per-group OLS from the ``ols`` moment block — the grouped
+    ``fit_ols``: undersized groups get NaN coefficients."""
+    k, keys = len(p.o), list(ms)
+    bad = tuple(key for key in keys if ms[key]["ols"].n < k)
+    coef = np.array([np.full(k, NAN) if key in bad else ols_from(ms[key]["ols"], k)
+                     for key in keys]).reshape(len(keys), k)
+    return FitResult(x_cols=list(p.predictors), intercept=len(p.o) > len(p.pnames), coef=coef,
+                     keys=keys, group_cols=list(group_cols), kind="ols",
+                     n_obs=min((m["ols"].n for m in ms.values()), default=0),
+                     degenerate_keys=bad)
 
 
-def naive_mean_grouped(
-    df: DataFrame, y_col: str, ind_col: str, group_cols: list[str]
-) -> dict[tuple, tuple]:
-    """Unweighted sample mean + SRS se per group (``nb[4]:37-49``)."""
-    rows = (
-        df.filter(F.col(ind_col) == 1)
-        .groupBy(*group_cols)
-        .agg(
-            F.avg(F.col(y_col).cast("double")).alias("m"),
-            F.stddev_samp(F.col(y_col).cast("double")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    return {
-        tuple(r[c] for c in group_cols): (
-            float(r["m"]),
-            float(r["s"]) / float(r["n"]) ** 0.5 if r["s"] is not None else None,
-        )
-        for r in rows
-    }
+def _logistic_fit(df: DataFrame, p, group_cols: list[str]) -> FitResult:
+    """The grouped Spark IRLS fit, labelled with the model's data columns."""
+    return replace(fit_logistic_on(df, p, group_cols), x_cols=list(p.predictors))
 
 
-def weighted_mean_grouped(
-    df: DataFrame, y_col: str, ind_col: str, weight_col: str, group_cols: list[str]
-) -> dict[tuple, tuple]:
+def _calibrations(p, ms: dict) -> dict:
+    out = {}
+    for key, m in ms.items():
+        try:
+            out[key] = pc_calibrate(p, m)
+        except EmptySample:
+            continue
+    return out
+
+
+def naive_mean_grouped(df: DataFrame, y_col: str, ind_col: str,
+                       group_cols: list[str]) -> dict[tuple, tuple]:
+    """Unweighted sample mean + SRS se per group (``nb[4]:37-49``); the se
+    is None below two observed outcomes, and its n counts every sample row."""
+    blocks = {"n": Block(), "y": Block(left=(ONE, Lin.of("y")), need=("y",))}
+    ms = spark_moments(df.where(f"{q(ind_col)} = 1"), {"y": as_double(y_col)}, blocks,
+                       group_cols)
+    out = {}
+    for key, m in ms.items():
+        y = m["y"]
+        # uncentered moments can round a zero variance below 0
+        var = max(var_samp(y.n, y.S[0, 1], y.S[1, 1]), 0.0)
+        se = math.sqrt(var / m["n"].n) if y.n >= 2 else None
+        out[key] = (y.S[0, 1] / y.n if y.n else NAN, se)
+    return out
+
+
+def weighted_mean_grouped(df: DataFrame, y_col: str, ind_col: str, weight_col: str,
+                          group_cols: list[str]) -> dict[tuple, tuple]:
     """Design-weighted sample mean per group — ``svymean(~y, svydesign(
-    weights=~d))`` point estimate (``nb[12]:36-38``)."""
-    w = F.col(weight_col).cast("double")
-    y = F.col(y_col).cast("double")
-    rows = (
-        df.filter(F.col(ind_col) == 1)
-        .groupBy(*group_cols)
-        .agg(F.sum(w * y).alias("swy"), F.sum(w).alias("sw"))
-        .collect()
-    )
-    # null guards match the sibling grouped estimators: an all-NULL y (or
-    # weight) group yields NaN instead of raising TypeError on float(None)
-    return {
-        tuple(r[c] for c in group_cols): (
-            float(r["swy"]) / float(r["sw"])
-            if r["swy"] is not None and (r["sw"] or 0.0) != 0.0
-            else float("nan"),
-            None,
-        )
-        for r in rows
-    }
+    weights=~d))`` point estimate (``nb[12]:36-38``); NaN without a row
+    carrying both y and a weight, or with zero weight."""
+    w = (Lin.of("w"),)
+    blocks = {"wy": Block(left=(ONE,), right=(Lin.of("y"),), weight=w, need=("y", "w")),
+              "w": Block(left=(ONE,), weight=w)}
+    ms = spark_moments(df.where(f"{q(ind_col)} = 1"),
+                       {"y": as_double(y_col), "w": as_double(weight_col)}, blocks, group_cols)
+    return {key: (m["wy"].S[0, 0] / m["w"].S[0, 0] if m["wy"].n and m["w"].S[0, 0] else NAN, None)
+            for key, m in ms.items()}
 
 
-def regdi_c0_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    group_cols: list[str],
-    aux_vars: list[str] | None = None,
-    weights_A: str | None = None,
-) -> dict[tuple, tuple]:
-    """RegDI correction-0 for every group at once (``RegDI2.R:126-193,
-    244-248`` vectorized).  Direct mode: each group is its own population.
-    With ``weights_A`` the design weights come from that column and the
-    population size is approximated by their sum (``RegDI2.R:106-116`` —
-    the stratified-study call shape, ``nb[12]:48-76``)."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    aux = list(aux_vars or [])
-
-    work = (
-        df.withColumn("uno", F.lit(1.0))
-        .withColumn("delta_i", F.when(indB, 1.0).otherwise(0.0))
-        .withColumn("delta_yi", F.when(indB, F.col(y_B_col).cast("double")).otherwise(0.0))
-    )
-    delta_aux = []
-    for z in aux:
-        dc = f"delta_{z}"
-        work = work.withColumn(dc, F.when(indB, F.col(z).cast("double")).otherwise(0.0))
-        delta_aux.append(dc)
-    x_cols = ["uno", "delta_i", "delta_yi"] + delta_aux
-
-    aggs = [
-        F.count(F.lit(1)).alias("N"),
-        F.sum(F.when(indA, 1).otherwise(0)).alias("nA"),
-        F.sum("delta_i").alias("t_di"),
-        F.sum("delta_yi").alias("t_dyi"),
-        *[F.sum(c).alias(f"t_{c}") for c in delta_aux],
-    ]
-    if weights_A is not None:
-        aggs.append(
-            F.sum(F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)).alias("swA")
-        )
-    tot_rows = work.groupBy(*group_cols).agg(*aggs).collect()
-    totals_by_group: dict[tuple, np.ndarray] = {}
-    d_by_group: dict[tuple, tuple] = {}
-    for r in tot_rows:
-        key = tuple(r[c] for c in group_cols)
-        N_uno = float(r["swA"]) if weights_A is not None else float(r["N"])
-        totals_by_group[key] = np.array(
-            [N_uno, float(r["t_di"] or 0.0), float(r["t_dyi"] or 0.0)]
-            + [float(r[f"t_{c}"] or 0.0) for c in delta_aux]
-        )
-        d_by_group[key] = (N_uno / max(int(r["nA"]), 1),)
-
-    if weights_A is not None:
-        sample_A = work.filter(indA).withColumn(
-            "d_i_A", F.col(weights_A).cast("double")
-        )
-    else:
-        sample_A = _broadcast_scalars(
-            work.filter(indA), group_cols, d_by_group, ["d_i_A"]
-        )
-    cal = calibrate(
-        sample_A, x_cols, totals=None, d_col="d_i_A", out_col="w_cal",
-        group_cols=group_cols, totals_by_group=totals_by_group,
-    )
-    design = SurveyDesign(
-        df=cal.df, weight_col="w_cal", calibration_cols=x_cols, base_weight_col="d_i_A"
-    )
-    return {
-        e.key: (e.estimate, e.se) for e in svymean(design, y_A_col, group_cols)
-    }
+def _regdi_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, group_cols, aux_vars,
+                   correction, weights_A=None, outcome_model=None, diag=None, fit=None,
+                   u_stats=None) -> dict[tuple, tuple]:
+    """``regdi`` for every group: one grouped moment pass, the GREG solve
+    per group, then sample A's sums of all groups at once."""
+    comb = _combined(df, ind_var_A, ind_var_B, y_A_col, y_B_col, aux_vars, weights_A)
+    p = regdi_plan(comb, weights_A, correction, outcome_model, U=u_stats is None)
+    ms = spark_moments(df, p.cols, p.blocks, group_cols)
+    out, steps = {}, {}
+    for key, m in ms.items():
+        try:
+            steps[key] = regdi_step(p, m, ols=fit is None)
+        except EmptySample:
+            continue
+        except IntegrationError:  # correction 2's validation fit
+            out[key] = (NAN, NAN)
+    a = sample_moments(df.where(p.cols["iA"]), p.cols, {k: st.blocks for k, st in steps.items()},
+                       sum(st.size_A for st in steps.values()), group_cols)
+    if correction == 2:
+        _note_fit(diag, degenerate=len(out))
+    if correction == 3:
+        fit = fit or _ols_fit(a, p, group_cols)
+        _note_fit(diag, fit)
+    for key, st in steps.items():
+        if correction == 3:
+            mean, var, _, _ = regdi_dr(p, st, ms[key], a[key], fit.coef_for(key),
+                                       None if u_stats is None else u_stats[key])
+        else:
+            mean, var = svymean_from(a[key])
+        out[key] = (mean, float(np.sqrt(var)))
+    return out
 
 
-def regdi_c2_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    group_cols: list[str],
-    aux_vars: list[str] | None = None,
-    diag: dict | None = None,
-) -> dict[tuple, tuple]:
-    """RegDI correction-2 (measurement error) for every group at once
-    (``RegDI2.R:250-307`` vectorized): per-group OLS of y_A on y_B over
-    the A∩B overlap, de-bias, then the correction-0 machinery on the
-    corrected outcome."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    fit = fit_ols(
-        df.filter(indA & indB), y_col=y_A_col, x_cols=[y_B_col],
-        group_cols=group_cols,
-    )
+def regdi_c0_grouped(df: DataFrame, y_A_col: str, y_B_col: str, ind_var_A: str,
+                     ind_var_B: str, group_cols: list[str], aux_vars: list[str] | None = None,
+                     weights_A: str | None = None) -> dict[tuple, tuple]:
+    """RegDI correction 0 for every group (``RegDI2.R:126-193,244-248``);
+    each group is its own population.  With ``weights_A`` the design
+    weights come from that column and N is their sum (``RegDI2.R:106-116``
+    — the stratified study's call, ``nb[12]:48-76``)."""
+    return _regdi_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, group_cols, aux_vars, 0,
+                          weights_A=weights_A)
+
+
+def regdi_c2_grouped(df: DataFrame, y_A_col: str, y_B_col: str, ind_var_A: str,
+                     ind_var_B: str, group_cols: list[str], aux_vars: list[str] | None = None,
+                     diag: dict | None = None) -> dict[tuple, tuple]:
+    """RegDI correction 2 (measurement error) for every group
+    (``RegDI2.R:250-307``): the y_A ~ y_B fit on each group's A∩B overlap,
+    de-bias, recalibrate."""
+    return _regdi_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, group_cols, aux_vars, 2,
+                          diag=diag)
+
+
+def regdi_dr_grouped(df: DataFrame, y_A_col: str, y_B_col: str, ind_var_A: str,
+                     ind_var_B: str, outcome_model: str, group_cols: list[str],
+                     aux_vars: list[str] | None = None, diag: dict | None = None, fit=None,
+                     u_stats: dict | None = None) -> dict[tuple, tuple]:
+    """RegDI correction 3 (doubly robust) for every group
+    (``RegDI2.R:196-241``): T = (sum_A w_cal*(y - yhat) + sum_U yhat)/N,
+    V = var(w*(y - yhat))/n_A + var_U(yhat)/N.  ``fit``/``u_stats``:
+    share hooks, see ``pc_dr1_grouped``."""
+    return _regdi_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, group_cols, aux_vars, 3,
+                          outcome_model=outcome_model, diag=diag, fit=fit, u_stats=u_stats)
+
+
+def _pc_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, aux_vars, group_cols, scenario,
+                outcome_model=None, model_type="normal", weights_A=None,
+                eval_model_performance=False, diag=None, fit=None, calb=None,
+                u_stats=None) -> dict[tuple, tuple]:
+    """``pc_estimator`` for every group: one grouped moment pass, the B
+    calibration and the outcome fit per group; scenario 1 adds one grouped
+    svymean pass over S_B, a logistic model its IRLS fit and one grouped
+    pass over its predictions."""
+    if model_type not in ("normal", "logistic"):
+        raise ValueError("model_type must be 'normal' or 'logistic'")
+    if fit is not None:
+        model_type = "logistic" if fit.kind == "logistic" else "normal"
+    comb = _combined(df, ind_var_A, ind_var_B, y_A_col or y_B_col, y_B_col, aux_vars, weights_A)
+    p = pc_plan(comb, weights_A, None, scenario, model_type, outcome_model,
+                eval_model_performance, calibrate=calb is None, ols=fit is None,
+                U=u_stats is None)
+    ms = spark_moments(df, p.cols, p.blocks, group_cols) if p.blocks else {}
+    calb = _calibrations(p, ms) if calb is None else calb
+    if scenario == 1:
+        bm = spark_moments(df.where(p.cols["iB"]), p.cols,
+                           {key: pc_s1_blocks(p, cal) for key, cal in calb.items()}, group_cols)
+        return {key: (mean, float(np.sqrt(var))) for key, (mean, var) in
+                ((key, svymean_from(m)) for key, m in bm.items())}
+
+    sizes = {key: ms[key]["A"].n for key in calb if key in ms and ms[key]["A"].n}
+    a_scale = {key: pc_a_scale(p, calb[key].N_total, n) for key, n in sizes.items()}
+    if fit is None:
+        fit = _logistic_fit(df, p, group_cols) if p.logistic else _ols_fit(ms, p, group_cols)
     _note_fit(diag, fit)
-    coefs = {
-        key: (float(fit.coef_for(key)[0]), float(fit.coef_for(key)[1]))
-        for key in fit.keys
-    }
-    j = _broadcast_scalars(df, group_cols, coefs, ["__b0__", "__b1__"])
-    y_corr = F.when(
-        indA, (F.col(y_A_col).cast("double") - F.col("__b0__")) / F.col("__b1__")
-    ).otherwise(F.col(y_B_col).cast("double"))
-    work = j.withColumn("__y_corr__", y_corr).drop("__b0__", "__b1__")
-    return regdi_c0_grouped(
-        work, "__y_corr__", "__y_corr__", ind_var_A, ind_var_B, group_cols,
-        aux_vars=aux_vars,
-    )
+    fitted = {key for key in fit.keys if key in sizes}
+    if p.logistic:
+        blocks = {key: pc_logistic_blocks(p, calb[key], fit.coef_for(key), a_scale[key],
+                                          eval_model_performance)
+                  for key in fitted if np.isfinite(fit.coef_for(key)).all()}
+        rs = spark_moments(df, p.cols, blocks, group_cols)
+        res = {key: pc_logistic_finish(p, calb[key], r, sizes[key]) for key, r in rs.items()}
+    else:
+        res = {key: pc_normal(p, calb[key], ms[key], fit.coef_for(key), a_scale[key],
+                              sizes[key], None if u_stats is None else u_stats[key][0])
+               for key in fitted}
+    out = {}
+    for key in sizes:
+        est, _, r2 = res.get(key, (NAN, None, NAN))
+        out[key] = (est, None, NAN if r2 is None else r2) if eval_model_performance else (est, None)
+    return out
 
 
-def pc_s2_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    aux_vars: list[str],
-    outcome_model: str,
-    group_cols: list[str],
-    model_type: str = "normal",
-    weights_A: str | None = None,
-    diag: dict | None = None,
-    calb: tuple | None = None,
-) -> dict[tuple, tuple]:
-    """PC scenario 2 (y unobserved in B) for every group
-    (``PC.R:255-297`` vectorized):
+def pc_s1_grouped(df: DataFrame, y_B_col: str, ind_var_B: str, aux_vars: list[str],
+                  group_cols: list[str], weights_A: str | None = None,
+                  ind_var_A: str | None = None, calb: dict | None = None) -> dict[tuple, tuple]:
+    """PC scenario 1 for every group (``PC.R:240-253``); ``weights_A``
+    switches to HT-estimated aux totals (``PC.R:188-193``).  ``calb``: a
+    :func:`calibrated_b_grouped` result, computed once for the battery
+    members that calibrate the SAME B sample to the SAME totals (the
+    caller's responsibility to pass a same-arguments result)."""
+    # sample A enters only through the HT totals of the calibration
+    ind_A = ind_var_A if weights_A is not None and calb is None else None
+    return _pc_grouped(df, None, y_B_col, ind_A, ind_var_B, aux_vars, group_cols, 1,
+                       weights_A=weights_A, calb=calb)
+
+
+def pc_s2_grouped(df: DataFrame, y_A_col: str, y_B_col: str, ind_var_A: str, ind_var_B: str,
+                  aux_vars: list[str], outcome_model: str, group_cols: list[str],
+                  model_type: str = "normal", weights_A: str | None = None,
+                  diag: dict | None = None, calb: dict | None = None) -> dict[tuple, tuple]:
+    """PC scenario 2 (y unobserved in B) for every group (``PC.R:255-297``):
     Yhat = (sum_B w_cal_B*yhat + sum_A d_A*(y_A - yhat)) / N.
     ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:274``);
-    ``weights_A`` uses the design-weight column for d_A and HT totals.
-    ``calb``: precomputed ``_calibrated_b`` result (see
-    ``pc_s1_grouped``)."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    b_df, _, sizes = calb if calb is not None else _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols, weights_A=weights_A, ind_var_A=ind_var_A
-    )
-
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    fit = _fit_grouped(df.filter(indA & indB), formula, model_type, group_cols)
-    _note_fit(diag, fit)
-
-    b_join, b_pred = fit.predict_expr_grouped(b_df)
-    t1_rows = (
-        b_join.select(*group_cols, (F.col("w_cal_B") * b_pred).alias("__t__"))
-        .groupBy(*group_cols).agg(F.sum("__t__").alias("t1"))
-        .collect()
-    )
-    t1 = {tuple(r[c] for c in group_cols): float(r["t1"] or 0.0) for r in t1_rows}
-
-    if weights_A is not None:
-        a_sample = df.filter(indA).withColumn("d_i_A", F.col(weights_A).cast("double"))
-    else:
-        # d_A = N / n_A per group (sizes carries n_B, so collect n_A here)
-        nA_rows = (
-            df.groupBy(*group_cols)
-            .agg(F.sum(F.when(indA, 1).otherwise(0)).alias("nA"))
-            .collect()
-        )
-        d_by_group = {
-            tuple(r[c] for c in group_cols): (
-                sizes[tuple(r[c] for c in group_cols)][0] / max(int(r["nA"]), 1),
-            )
-            for r in nA_rows
-        }
-        a_sample = _broadcast_scalars(df.filter(indA), group_cols, d_by_group, ["d_i_A"])
-    a_join, a_pred = fit.predict_expr_grouped(a_sample)
-    t2_rows = (
-        a_join.select(
-            *group_cols,
-            (F.col("d_i_A") * (F.col(y_A_col).cast("double") - a_pred)).alias("__t__"),
-        )
-        .groupBy(*group_cols).agg(F.sum("__t__").alias("t2"))
-        .collect()
-    )
-    out: dict[tuple, tuple] = {}
-    for r in t2_rows:
-        key = tuple(r[c] for c in group_cols)
-        N, _ = sizes[key]
-        out[key] = ((t1[key] + float(r["t2"] or 0.0)) / N, None)
-    return out
+    ``weights_A`` uses the design-weight column for d_A and HT totals."""
+    return _pc_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, aux_vars, group_cols, 2,
+                       outcome_model, model_type, weights_A, diag=diag, calb=calb)
 
 
-def _calibrated_b(
-    df: DataFrame,
-    ind_var_B: str,
-    aux_vars: list[str],
-    group_cols: list[str],
-    weights_A: str | None = None,
-    ind_var_A: str | None = None,
-):
-    """Shared PC step: per-group aux totals + B-weight calibration
-    (``PC.R:180-237`` vectorized).  Returns (b_df, x_cols, per-group
-    N / n_B dict).
-
-    Default: direct population sums (direct mode).  With ``weights_A``
-    (and ``ind_var_A``) the totals are Horvitz-Thompson estimates from
-    the weighted probability sample and N is the weight sum — the
-    reference's two-table shape (``PC.R:188-199``, ``nb[12]:78-88``)."""
-    indB = F.col(ind_var_B) == 1
-    ht = weights_A is not None
-    if ht:
-        indA = F.col(ind_var_A) == 1
-        wA = F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-        aggs = [
-            F.sum(wA).alias("N"),
-            F.sum(F.when(indB, 1).otherwise(0)).alias("nB"),
-            *[F.sum(wA * F.col(z).cast("double")).alias(f"t_{z}") for z in aux_vars],
-        ]
-    else:
-        aggs = [
-            F.count(F.lit(1)).cast("double").alias("N"),
-            F.sum(F.when(indB, 1).otherwise(0)).alias("nB"),
-            *[F.sum(F.col(z).cast("double")).alias(f"t_{z}") for z in aux_vars],
-        ]
-    tot_rows = df.groupBy(*group_cols).agg(*aggs).collect()
-    totals_by_group: dict[tuple, np.ndarray] = {}
-    scalars: dict[tuple, tuple] = {}
-    sizes: dict[tuple, tuple] = {}
-    for r in tot_rows:
-        key = tuple(r[c] for c in group_cols)
-        totals_by_group[key] = np.array([float(r[f"t_{z}"] or 0.0) for z in aux_vars])
-        scalars[key] = (float(r["N"]) / max(int(r["nB"]), 1),)
-        sizes[key] = (float(r["N"]), int(r["nB"]))
-    sample_B = _broadcast_scalars(df.filter(indB), group_cols, scalars, ["d_i_B"])
-    cal = calibrate(
-        sample_B, list(aux_vars), totals=None, d_col="d_i_B", out_col="w_cal_B",
-        group_cols=group_cols, totals_by_group=totals_by_group,
-    )
-    return cal.df, list(aux_vars), sizes
-
-
-def pc_s1_grouped(
-    df: DataFrame,
-    y_B_col: str,
-    ind_var_B: str,
-    aux_vars: list[str],
-    group_cols: list[str],
-    weights_A: str | None = None,
-    ind_var_A: str | None = None,
-    calb: tuple | None = None,
-) -> dict[tuple, tuple]:
-    """PC scenario 1 for every group at once (``PC.R:240-253`` vectorized);
-    ``weights_A`` switches to HT-estimated aux totals (``PC.R:188-193``).
-
-    ``calb`` (r17, guide §1.2 don't-compute-twice): a precomputed
-    ``_calibrated_b(df, ind_var_B, aux_vars, group_cols, ...)`` result —
-    several PC battery members calibrate the SAME B sample to the SAME
-    aux totals, so the MC harness computes the triple once and hands it
-    to each member; the values are the ones this function would compute
-    itself (caller's responsibility to pass a same-arguments result)."""
-    b_df, x_cols, _ = calb if calb is not None else _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols, weights_A=weights_A, ind_var_A=ind_var_A
-    )
-    design = SurveyDesign(
-        df=b_df, weight_col="w_cal_B", calibration_cols=x_cols, base_weight_col="d_i_B"
-    )
-    return {e.key: (e.estimate, e.se) for e in svymean(design, y_B_col, group_cols)}
-
-
-def pc_dr1_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    aux_vars: list[str],
-    outcome_model: str,
-    group_cols: list[str],
-    model_type: str = "normal",
-    eval_model_performance: bool = False,
-    diag: dict | None = None,
-    fit=None,
-    calb: tuple | None = None,
-    u_stats: dict | None = None,
-) -> dict[tuple, tuple]:
-    """PC scenario-3 DR1 for every group (``PC.R:299-328`` vectorized):
+def pc_dr1_grouped(df: DataFrame, y_A_col: str, y_B_col: str, ind_var_A: str, ind_var_B: str,
+                   aux_vars: list[str], outcome_model: str, group_cols: list[str],
+                   model_type: str = "normal", eval_model_performance: bool = False,
+                   diag: dict | None = None, fit=None, calb: dict | None = None,
+                   u_stats: dict | None = None) -> dict[tuple, tuple]:
+    """PC scenario-3 DR1 for every group (``PC.R:299-328``):
     Yhat = (sum_B w_cal_B*(y_B - yhat) + sum_U yhat) / N.
-    ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:311``).
+    ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:311``);
+    ``eval_model_performance`` appends each group's A-sample R² of the
+    outcome model (``PC.R:330-340``, recorded by the nb[37] study).
 
-    With ``eval_model_performance`` each value tuple gains the
-    per-group A-sample R² of the outcome model (``PC.R:330-340``,
-    recorded by the nb[37] study) — the residual stats ride the same
-    U-side pass as masked sums, no extra job.
-
-    Share hooks (r17, guide §1.2 don't-compute-twice): ``fit`` injects
-    a precomputed outcome model (several MC battery members fit the
-    IDENTICAL formula on the identical A sample), ``calb`` a
-    precomputed ``_calibrated_b`` result, and ``u_stats`` the
-    full-population prediction moments from
-    :func:`u_pred_stats_grouped` under the SAME fit (ignored when
-    ``eval_model_performance`` needs the A-masked residual stats that
-    ride the U pass)."""
-    indA = F.col(ind_var_A) == 1
-    b_df, _, sizes = calb if calb is not None else _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols
-    )
-
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    if fit is None:
-        fit = _fit_grouped(df.filter(indA), formula, model_type, group_cols)
-    _note_fit(diag, fit)
-
-    if u_stats is not None and not eval_model_performance:
-        u_by = u_stats
-    else:
-        u_join, u_pred = fit.predict_expr_grouped(df)
-        ya = F.col(y_A_col).cast("double")
-        u_aggs = [F.sum(F.col("__yhat__")).alias("sum_pred")]
-        if eval_model_performance:
-            res2 = F.when(indA, F.pow(ya - F.col("__yhat__"), 2))
-            u_aggs += [
-                F.sum(res2).alias("ssr_A"),
-                F.var_samp(F.when(indA, ya)).alias("var_yA"),
-                F.sum(F.when(indA, 1).otherwise(0)).alias("n_A"),
-            ]
-        u_rows = (
-            u_join.withColumn("__yhat__", u_pred)
-            .groupBy(*group_cols).agg(*u_aggs)
-            .collect()
-        )
-        u_by = {tuple(r[c] for c in group_cols): r for r in u_rows}
-
-    b_join, b_pred = fit.predict_expr_grouped(b_df)
-    t1_rows = (
-        b_join.select(
-            *group_cols,
-            (F.col("w_cal_B") * (F.col(y_B_col).cast("double") - b_pred)).alias("__t__"),
-        )
-        .groupBy(*group_cols).agg(F.sum("__t__").alias("t1"))
-        .collect()
-    )
-    out: dict[tuple, tuple] = {}
-    for r in t1_rows:
-        key = tuple(r[c] for c in group_cols)
-        N, _ = sizes[key]
-        u = u_by[key]
-        est = (float(r["t1"] or 0.0) + float(u["sum_pred"] or 0.0)) / N
-        if eval_model_performance:
-            n_A = int(u["n_A"] or 0)
-            sst = (u["var_yA"] or 0.0) * max(n_A - 1, 0)
-            r2 = 1.0 - (u["ssr_A"] or 0.0) / sst if sst > 0 else float("nan")
-            out[key] = (est, None, float(r2))
-        else:
-            out[key] = (est, None)
-    return out
+    Share hooks, for battery members that fit the IDENTICAL formula on the
+    identical A sample: ``fit`` (:func:`fit_outcome_grouped`), ``calb``
+    (:func:`calibrated_b_grouped`) and ``u_stats``
+    (:func:`u_pred_stats_grouped` under the same fit)."""
+    return _pc_grouped(df, y_A_col, y_B_col, ind_var_A, ind_var_B, aux_vars, group_cols, 3,
+                       outcome_model, model_type, None, eval_model_performance, diag, fit,
+                       calb, u_stats)
 
 
-def fit_outcome_grouped(
-    df: DataFrame,
-    ind_var_A: str,
-    outcome_model: str,
-    group_cols: list[str],
-    model_type: str = "normal",
-):
-    """The outcome-model fit the DR estimators run internally
-    (A-sample, grouped) as a standalone call — EXACTLY the statement
-    ``pc_dr1_grouped``/``regdi_dr_grouped`` issue, so a battery whose
-    members share (sample, formula) can compute it once and inject it
-    via their ``fit=`` hooks (r17)."""
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    return _fit_grouped(
-        df.filter(F.col(ind_var_A) == 1), formula, model_type, group_cols
-    )
+def fit_outcome_grouped(df: DataFrame, ind_var_A: str, outcome_model: str,
+                        group_cols: list[str], model_type: str = "normal") -> FitResult:
+    """The DR members' outcome-model fit on sample A as a standalone call,
+    injected into their ``fit=`` hooks."""
+    if model_type not in ("normal", "logistic"):
+        raise ValueError("model_type must be 'normal' or 'logistic'")
+    p = pc_plan(_combined(df, ind_var_A, ind_var_A, "", "", []), None, None, 3, model_type,
+                outcome_model, False, calibrate=False, U=False)
+    if p.logistic:
+        return _logistic_fit(df, p, group_cols)
+    return _ols_fit(spark_moments(df.where(p.cols["iA"]), p.cols, {"ols": p.blocks["ols"]},
+                                  group_cols), p, group_cols)
 
 
-def calibrated_b_grouped(
-    df: DataFrame,
-    ind_var_B: str,
-    aux_vars: list[str],
-    group_cols: list[str],
-    weights_A: str | None = None,
-    ind_var_A: str | None = None,
-) -> tuple:
-    """Public alias of the shared PC calibration step — computed once
-    per (B sample, aux set) and injected into the PC members'
-    ``calb=`` hooks (r17)."""
-    return _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols,
-        weights_A=weights_A, ind_var_A=ind_var_A,
-    )
+def calibrated_b_grouped(df: DataFrame, ind_var_B: str, aux_vars: list[str],
+                         group_cols: list[str], weights_A: str | None = None,
+                         ind_var_A: str | None = None) -> dict:
+    """The PC members' shared B calibration, ``{key: PCCal}``, injected
+    into their ``calb=`` hooks.  Direct population totals, or with
+    ``weights_A`` (and ``ind_var_A``) HT totals from the weighted A sample
+    and N the A weight sum (``PC.R:188-199``, ``nb[12]:78-88``)."""
+    p = pc_plan(_combined(df, ind_var_A, ind_var_B, "", "", aux_vars, weights_A), weights_A,
+                None, 1, "normal", None, False)
+    return _calibrations(p, spark_moments(df, p.cols, p.blocks, group_cols))
 
 
 def u_pred_stats_grouped(df: DataFrame, fit, group_cols: list[str]) -> dict:
-    """Full-population prediction moments under ``fit``: key ->
-    Row(sum_pred, var_pred) — the U-side pass that RegDI-DR has always
-    run (identical statement shape, so identical floats), now callable
-    once and shared with every DR battery member that uses the SAME
-    fit (r17, guide §1.2 don't-compute-twice / §2.4 share the pass)."""
-    u_join, u_pred = fit.predict_expr_grouped(df)
-    u_rows = (
-        u_join.select(*group_cols, u_pred.alias("__yhat__"))
-        .groupBy(*group_cols)
-        .agg(F.sum("__yhat__").alias("sum_pred"),
-             F.var_samp("__yhat__").alias("var_pred"))
-        .collect()
-    )
-    return {tuple(r[c] for c in group_cols): r for r in u_rows}
-
-
-def regdi_dr_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    outcome_model: str,
-    group_cols: list[str],
-    aux_vars: list[str] | None = None,
-    diag: dict | None = None,
-    fit=None,
-    u_stats: dict | None = None,
-) -> dict[tuple, tuple]:
-    """RegDI correction-3 (doubly robust) for every group
-    (``RegDI2.R:196-241`` vectorized):
-    T = (sum_A w_cal*(y - yhat) + sum_U yhat)/N,
-    V = var(w*(y - yhat))/n_A + var_U(yhat)/N.
-
-    ``fit``/``u_stats`` (r17): share hooks for a precomputed outcome
-    model and its full-population prediction moments
-    (:func:`u_pred_stats_grouped`) — see ``pc_dr1_grouped``."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    aux = list(aux_vars or [])
-
-    work = (
-        df.withColumn("uno", F.lit(1.0))
-        .withColumn("delta_i", F.when(indB, 1.0).otherwise(0.0))
-        .withColumn("delta_yi", F.when(indB, F.col(y_B_col).cast("double")).otherwise(0.0))
-    )
-    delta_aux = []
-    for z in aux:
-        dc = f"delta_{z}"
-        work = work.withColumn(dc, F.when(indB, F.col(z).cast("double")).otherwise(0.0))
-        delta_aux.append(dc)
-    x_cols = ["uno", "delta_i", "delta_yi"] + delta_aux
-
-    tot_rows = (
-        work.groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("N"),
-            F.sum(F.when(indA, 1).otherwise(0)).alias("nA"),
-            F.sum("delta_i").alias("t_di"),
-            F.sum("delta_yi").alias("t_dyi"),
-            *[F.sum(c).alias(f"t_{c}") for c in delta_aux],
-        )
-        .collect()
-    )
-    totals_by_group: dict[tuple, np.ndarray] = {}
-    d_by_group: dict[tuple, tuple] = {}
-    N_by_group: dict[tuple, float] = {}
-    for r in tot_rows:
-        key = tuple(r[c] for c in group_cols)
-        totals_by_group[key] = np.array(
-            [float(r["N"]), float(r["t_di"] or 0.0), float(r["t_dyi"] or 0.0)]
-            + [float(r[f"t_{c}"] or 0.0) for c in delta_aux]
-        )
-        d_by_group[key] = (float(r["N"]) / max(int(r["nA"]), 1),)
-        N_by_group[key] = float(r["N"])
-
-    sample_A = _broadcast_scalars(work.filter(indA), group_cols, d_by_group, ["d_i_A"])
-    cal = calibrate(
-        sample_A, x_cols, totals=None, d_col="d_i_A", out_col="w_cal",
-        group_cols=group_cols, totals_by_group=totals_by_group,
-    )
-
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    if fit is None:
-        fit = fit_ols(
-            df.filter(indA), y_col=formula.response,
-            x_cols=list(formula.predictors),
-            intercept=formula.intercept, group_cols=group_cols,
-        )
-    _note_fit(diag, fit)
-
-    a_join, a_pred = fit.predict_expr_grouped(cal.df)
-    a_rows = (
-        a_join.select(
-            *group_cols,
-            (F.col("w_cal") * (F.col(y_A_col).cast("double") - a_pred)).alias("__wres__"),
-        )
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("__wres__").alias("sum_wres"),
-            F.var_samp("__wres__").alias("var_wres"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    if u_stats is not None:
-        u_by = u_stats
-    else:
-        u_by = u_pred_stats_grouped(df, fit, group_cols)
-
-    out: dict[tuple, tuple] = {}
-    for r in a_rows:
-        key = tuple(r[c] for c in group_cols)
-        N = N_by_group[key]
-        n_A = int(r["n"])
-        u = u_by[key]
-        t = ((r["sum_wres"] or 0.0) + (u["sum_pred"] or 0.0)) / N
-        v = (r["var_wres"] or 0.0) / n_A + (u["var_pred"] or 0.0) / N
-        out[key] = (float(t), float(v) ** 0.5)
-    return out
+    """(Σ_U yhat, var_U yhat) per group under ``fit``, shared by the DR
+    members that use the SAME fit: from the moments of the design for a
+    linear fit, from one grouped pass over the predictions for a logistic."""
+    cols = {f"p{j}": as_double(c) for j, c in enumerate(fit.x_cols)}
+    pn = tuple(cols)
+    o = ((ONE,) if fit.intercept else ()) + tuple(map(Lin.of, pn))
+    if fit.kind == "ols":
+        ms = spark_moments(df, cols, {"U": Block(left=(ONE, *map(Lin.of, pn)), need=pn)},
+                           group_cols)
+        return {key: pred_stats(ms[key]["U"], fit.coef_for(key), len(o))
+                for key in fit.keys if key in ms}
+    ms = spark_moments(df, cols, {
+        key: {"U": Block(left=(ONE, replace(Lin.comb(fit.coef_for(key), o), logit=True)),
+                         need=pn)} for key in fit.keys}, group_cols)
+    return {key: (m["U"].S[0, 1], var_samp(m["U"].n, m["U"].S[0, 1], m["U"].S[1, 1]))
+            for key, m in ms.items()}
 
 
 def clw_grouped(
@@ -696,7 +417,7 @@ def clw_grouped(
             )
             for r in n_rows
         }
-        base = _broadcast_scalars(df.filter(in_sample), group_cols, d_by,
+        base = broadcast_by_key(df.filter(in_sample), group_cols, d_by,
                                   ["__dA__"])
         d = "__dA__"
     # n_iter + 3 passes re-read this small (A ∪ B) frame: cache it so
@@ -723,7 +444,7 @@ def clw_grouped(
             return "(" + " + ".join(f"{tcols[i]} * {xs[i]}" for i in range(k)) + ")"
 
         for _it in range(n_iter):
-            work = _broadcast_scalars(
+            work = broadcast_by_key(
                 base, group_cols,
                 {key: tuple(th) for key, th in thetas.items()}, tcols,
             )
@@ -784,7 +505,7 @@ def clw_grouped(
         )
         _note_fit(diag, fit)
 
-        work = _broadcast_scalars(
+        work = broadcast_by_key(
             base, group_cols, {key: tuple(th) for key, th in thetas.items()},
             tcols,
         )
@@ -904,8 +625,8 @@ def clw_grouped(
                     continue
                 folded[key] = (mu_i, mu_d, *b_ipw, *bt, *bb)
             if folded:
-                vwork = _broadcast_scalars(
-                    _broadcast_scalars(
+                vwork = broadcast_by_key(
+                    broadcast_by_key(
                         base, group_cols,
                         {key: tuple(th) for key, th in thetas.items()}, tcols,
                     ),

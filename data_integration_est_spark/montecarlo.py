@@ -12,10 +12,11 @@ is ONE DataFrame keyed by (gamma, sim_id, unit id):
 - S_A is an exact-size SRS per sim; S_B is an exact-size unequal-
   probability (NMAR logistic) draw per (gamma, sim) — both as ranked
   windows, one shuffle for the entire grid;
-- every estimator runs once over all cells via the grouped kernels
-  (``estimators.vectorized``) — stacked driver solves, broadcast joins.
+- every estimator runs once over all cells (``estimators.vectorized``):
+  the single-call estimator's moment pass as one grouped aggregate, its
+  driver math once per cell.
 
-Total shuffle count for a full grid study: ~10, independent of grid size.
+The Spark jobs of a full grid study do not grow with the grid.
 """
 
 from __future__ import annotations

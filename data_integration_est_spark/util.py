@@ -1,9 +1,8 @@
 """Small utilities (SURVEY.md §2.8 O4).
 
-The reference wraps noisy estimator calls in ``suppressWarnings`` /
-``quiet()`` sinks and ``tryCatch`` rethrows (``nb[12]:35``, ``PC.R:41-45,
-221-230``).  Python/Spark analogues: a log-level context manager and an
-error-context re-raiser.
+The reference wraps estimator calls in ``tryCatch`` rethrows
+(``PC.R:221-230``); the Python analogue here is an error-context
+re-raiser.
 """
 
 from __future__ import annotations
@@ -13,18 +12,6 @@ import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-
-@contextmanager
-def quiet_logs(spark: SparkSession, level: str = "ERROR"):
-    """Temporarily raise the Spark log level (``quiet()``, ``PC.R:41-45``)."""
-    sc = spark.sparkContext
-    prev = sc._jvm.org.apache.log4j.LogManager.getRootLogger().getLevel()
-    sc.setLogLevel(level)
-    try:
-        yield
-    finally:
-        sc._jvm.org.apache.log4j.LogManager.getRootLogger().setLevel(prev)
 
 
 def spread(df, min_parts: int | None = None):

@@ -90,3 +90,27 @@ def test_regdi_by_rounding_and_order(pop):
     assert [r["dom"] for r in rows] == ["0", "1", "2"]
     for r in rows:
         assert r["est_mean"] == round(r["est_mean"], 4)
+
+
+@pytest.mark.parametrize("budget", ["default", "zero"])
+def test_null_domain_is_estimated_like_any_other(pop, budget, monkeypatch):
+    """A null domain value is a domain of its own on both of sample A's
+    evaluation paths (Arrow collect, or a grouped aggregate over a
+    broadcast table of per-domain coefficients)."""
+    from data_integration_est_spark.estimators import moments
+
+    if budget == "zero":
+        monkeypatch.setattr(moments, "ROW_BUDGET", 0)
+    nulls = pop.withColumn("dom", F.when(F.col("dom") != "2", F.col("dom")))
+    sub = pop.filter(F.col("dom") == "2")
+    got = {r["dom"]: r for r in regdi_by(nulls, "dom", "y", "y", "ind_a", "ind_b",
+                                         aux_vars=["x"]).collect()}
+    want = regdi(data=sub, y_A_col="y", y_B_col="y", ind_var_A="ind_a",
+                 ind_var_B="ind_b", aux_vars=["x"])
+    assert got[None]["est_mean"] == pytest.approx(want.mean, rel=1e-9)
+    assert got[None]["est_se"] == pytest.approx(want.se, rel=1e-7)
+    got = {r["dom"]: r for r in pc_by(nulls, "dom", "y", "ind_b", aux_vars=["x1", "x2"]).collect()}
+    want = pc_estimator(data=sub, y_A_col="y", y_B_col="y", ind_var_A="ind_a",
+                        ind_var_B="ind_b", aux_vars=["x1", "x2"], scenario=1)
+    assert got[None]["est_mean"] == pytest.approx(want.estimate, rel=1e-9)
+    assert got[None]["est_se"] == pytest.approx(want.se, rel=1e-7)

@@ -1,12 +1,15 @@
 """Spark work per single-call RegDI / PC estimate: argument errors surface
 before any job, each direct-mode member stays within its job bound, and no
-call leaves anything cached behind."""
+call leaves anything cached behind.  The grouped (Monte Carlo) members run
+every group within their single-call twin's bound."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
+from data_integration_est_spark import montecarlo as mc
 from data_integration_est_spark import pc_estimator, regdi
+from data_integration_est_spark.estimators import vectorized as V
 from data_integration_est_spark.integrate import IntegrationError
 
 from test_estimators import COMMON, make_population
@@ -95,4 +98,33 @@ def test_error_after_moment_pass_leaves_no_cache(spark, call):
     jobs, cached, err = _run(spark, lambda: call(df))
     assert isinstance(err, IntegrationError) and "no units in sample B" in str(err)
     assert jobs >= 1  # raised after the moment pass ran
+    assert cached == 0
+
+
+@pytest.fixture(scope="module")
+def grid(spark):
+    pop = mc.nmar_grid_population(spark, N=2_000, n_sim=2, gammas=(0.0, 1.0), size_a=200,
+                                  size_b=400, seed=5).persist()
+    pop.count()
+    yield pop
+    pop.unpersist()
+
+
+G, A, B = ["gamma", "sim_id"], "muestra_A", "muestra_B"
+GROUPED = {
+    "regdi_c0": lambda d: V.regdi_c0_grouped(d, "y_i", "y_i", A, B, G, aux_vars=AUX1),
+    "regdi_c2": lambda d: V.regdi_c2_grouped(d, "y_i", "tilde_y_i", A, B, G),
+    "regdi_c3": lambda d: V.regdi_dr_grouped(d, "y_i", "y_i", A, B, "y_i ~ x_i", G,
+                                             aux_vars=AUX1),
+    "pc_s1": lambda d: V.pc_s1_grouped(d, "y_i", B, AUX2, G),
+    "pc_s2": lambda d: V.pc_s2_grouped(d, "y_i", "tilde_y_i", A, B, AUX2, "y_i ~ tilde_y_i", G),
+    "pc_s3": lambda d: V.pc_dr1_grouped(d, "y_i", "y_i", A, B, AUX2, "y_i ~ x_i", G),
+}
+
+
+@pytest.mark.parametrize("member", sorted(GROUPED))
+def test_grouped_jobs_within_single_call_bound_and_no_cache_left(spark, grid, member):
+    jobs, cached, err = _run(spark, lambda: GROUPED[member](grid))
+    assert err is None, err
+    assert 1 <= jobs <= MEMBERS[member][0]
     assert cached == 0

@@ -29,10 +29,9 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 MAX_STALE_ROUNDS = 6
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _history():

@@ -330,3 +330,112 @@ def test_nmar_study_clw_families(spark):
     mean_se = sum(v for v in ses) / len(ses)
     assert 0.1 * mean_se < max(spread, 1e-9) < 10 * mean_se
     assert res.diagnostics["CLW"].get("degenerate_groups", 0) == 0
+
+
+def _svymean_np(y, d, w, x):
+    """``survey::svymean`` on a calibrated design (weights w, design
+    weights d, calibration columns x): the mean and its linearisation SE."""
+    import numpy as np
+
+    m = (w * y).sum() / w.sum()
+    B = np.linalg.solve(x.T @ (d[:, None] * x), x.T @ (d * (y - m)))
+    u = w * (y - m - x @ B) / w.sum()
+    n = len(y)
+    return m, (n / (n - 1.0) * ((u * u).sum() - u.sum() ** 2 / n)) ** 0.5
+
+
+def _greg_np(d, x, T):
+    """GREG weights d(1 + x'lam) calibrated to the totals T."""
+    import numpy as np
+
+    lam = np.linalg.solve(x.T @ (d[:, None] * x), T - x.T @ d)
+    return d * (1.0 + x @ lam)
+
+
+def test_weighted_and_r2_grouped_paths_vs_numpy(spark, grid_pop):
+    """Numpy transcriptions of the grouped paths the scalar-parity tests
+    do not reach, on one cell at 1e-9: RegDI correction 0 with design
+    weights (N = sum of the A weights), PC scenarios 1 and 2 with
+    Horvitz-Thompson totals from the weighted A sample, and the per-cell
+    R² of PC scenario 3's outcome model."""
+    import numpy as np
+
+    pop = mc.stratified_grid_population(
+        spark, N=2_000, n_sim=2, n_A_total=200, n_B_total=600, seed=31,
+    ).persist()
+    try:
+        g, key = ["sim_id"], (2,)
+        c0 = V.regdi_c0_grouped(pop, "y_i", "y_i", "ind_A", "ind_B", g,
+                                aux_vars=["stratum"], weights_A="d_i_A")[key]
+        s1 = V.pc_s1_grouped(pop, "y_i", "ind_B", ["stratum"], g,
+                             weights_A="d_i_A", ind_var_A="ind_A")[key]
+        s2 = V.pc_s2_grouped(pop, "y_i", "tilde_y_i", "ind_A", "ind_B", ["stratum"],
+                             "y_i ~ tilde_y_i", g, weights_A="d_i_A")[key]
+        pdf = pop.filter(F.col("sim_id") == key[0]).select(
+            "y_i", "tilde_y_i", "stratum", "ind_A", "ind_B", "d_i_A").toPandas()
+    finally:
+        pop.unpersist()
+    y, yt = pdf.y_i.to_numpy(), pdf.tilde_y_i.to_numpy()
+    s = pdf.stratum.to_numpy(dtype=float)
+    inA, inB = pdf.ind_A.to_numpy() == 1, pdf.ind_B.to_numpy() == 1
+    dA = pdf.d_i_A.to_numpy(dtype=float)[inA]
+    N = dA.sum()
+
+    # RegDI: x = [1, delta, delta*y_B, delta*stratum], T[0] = N
+    x = np.column_stack([np.ones(len(y)), inB, np.where(inB, y, 0.0), np.where(inB, s, 0.0)])
+    T = np.concatenate(([N], x[:, 1:].sum(axis=0)))
+    w = _greg_np(dA, x[inA], T)
+    m, se = _svymean_np(y[inA], dA, w, x[inA])
+    assert c0[0] == pytest.approx(m, rel=1e-9)
+    assert c0[1] == pytest.approx(se, rel=1e-9)
+
+    # PC: B weights N/n_B calibrated to the HT total of stratum
+    dB = np.full(inB.sum(), N / inB.sum())
+    zB = s[inB][:, None]
+    wB = _greg_np(dB, zB, np.array([(dA * s[inA]).sum()]))
+    m, se = _svymean_np(y[inB], dB, wB, zB)
+    assert s1[0] == pytest.approx(m, rel=1e-9)
+    assert s1[1] == pytest.approx(se, rel=1e-9)
+
+    inAB = inA & inB
+    D = np.column_stack([np.ones(inAB.sum()), yt[inAB]])
+    beta = np.linalg.solve(D.T @ D, D.T @ y[inAB])
+    yhat = beta[0] + beta[1] * yt
+    est = ((wB * yhat[inB]).sum() + (dA * (y[inA] - yhat[inA])).sum()) / N
+    assert s2[0] == pytest.approx(est, rel=1e-9)
+
+    # PC scenario 3's R² of y ~ x on sample A
+    gk = ["gamma", "sim_id"]
+    dr = V.pc_dr1_grouped(grid_pop, "y_i", "y_i", "muestra_A", "muestra_B",
+                          ["x1_i", "x2_i"], "y_i ~ x_i", gk,
+                          eval_model_performance=True)[(1.0, 2)]
+    cell = grid_pop.filter((F.col("gamma") == 1.0) & (F.col("sim_id") == 2))
+    pdf = cell.filter(F.col("muestra_A") == 1).select("y_i", "x_i").toPandas()
+    ya, xa = pdf.y_i.to_numpy(), pdf.x_i.to_numpy()
+    D = np.column_stack([np.ones(len(ya)), xa])
+    res = ya - D @ np.linalg.solve(D.T @ D, D.T @ ya)
+    r2 = 1.0 - (res * res).sum() / (ya.var(ddof=1) * (len(ya) - 1))
+    assert dr[2] == pytest.approx(r2, rel=1e-9)
+
+
+@pytest.mark.parametrize("member", ["c0", "c2", "c3"])
+def test_grouped_regdi_spark_sample_path_matches_collect(grid_pop, member, monkeypatch):
+    """Above ``ROW_BUDGET`` sample A's grouped sums run as one aggregate
+    over a broadcast table of each group's coefficients; it must agree
+    with the Arrow-collect path group for group."""
+    from data_integration_est_spark.estimators import moments
+
+    g, A, B = ["gamma", "sim_id"], "muestra_A", "muestra_B"
+    call = {
+        "c0": lambda: V.regdi_c0_grouped(grid_pop, "y_i", "y_i", A, B, g, aux_vars=["x1_i"]),
+        "c2": lambda: V.regdi_c2_grouped(grid_pop, "y_i", "tilde_y_i", A, B, g),
+        "c3": lambda: V.regdi_dr_grouped(grid_pop, "y_i", "y_i", A, B, "y_i ~ x_i", g,
+                                         aux_vars=["x1_i"]),
+    }[member]
+    want = call()
+    monkeypatch.setattr(moments, "ROW_BUDGET", 0)
+    got = call()
+    assert got.keys() == want.keys()
+    for key, (est, se) in want.items():
+        assert got[key][0] == pytest.approx(est, rel=1e-9)
+        assert got[key][1] == pytest.approx(se, rel=1e-9)

@@ -7,9 +7,11 @@ from __future__ import annotations
 
 
 def test_pipeline_demo_runs_and_is_deterministic(spark, sf_dir):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    sys.path.insert(0, tools)
     from pipeline_demo import run_pipeline
 
     out = run_pipeline(spark, sf_dir, k_per_source=5)

@@ -10,7 +10,7 @@ hidden driver collect / shuffle explosion appear?"):
 
 - ``mc``: the nb[23]-shape Monte Carlo grid at N=1e5 (the bench's
   mc_grid_full shape) and at N=1e6 — 10M vs 100M expanded (unit, gamma,
-  sim) rows through the same ~10-shuffle vectorized study.
+  sim) rows through the same grouped-estimator study.
 - ``docs``: the MinHash/LSH dedup candidate path over the sf0.1
   documents corpus at 1x and a 10x union (ids offset so the copies are
   distinct docs), plus the text-stats scan profile at both sizes.
